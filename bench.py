@@ -139,6 +139,7 @@ def main() -> None:
 
     spark = get_session("bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
     timings: dict[str, float] = {}
     job_counts: dict[str, int] = {}
@@ -190,6 +191,10 @@ def main() -> None:
             "jobs": job_counts,
             "jobs_unstable": jobs_unstable,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            # What local[...] was asked for, and the parallelism the
+            # session actually got.
+            "cpus": int(cpus) if cpus.isdigit() else cpus,
+            "default_parallelism": spark.sparkContext.defaultParallelism,
         }
     )
     # Stop the JVM FIRST, then print: the JSON is guaranteed to be the

@@ -177,8 +177,8 @@ def contract_identical_sets(t: DataFrame, set_col: str = "toks"):
     # downstream maps (150x explode → 16 md5 minima) ran at the
     # byte-coalesced width (~32-108 tasks at sf50) with
     # data-proportional per-task state: the borderline allocations
-    # behind r12's sf50 8 g UNABLE_TO_ACQUIRE_MEMORY (receipts
-    # tools/receipts/sf50_8g_probe_r13.txt). Repartitioning the
+    # behind r12's sf50 8 g UNABLE_TO_ACQUIRE_MEMORY (receipt
+    # tools/receipts/sf50_minhash_r13.txt). Repartitioning the
     # SCAN-DERIVED frame — whose partitioning is unknown, so the
     # exchange survives as non-coalescable REPARTITION_BY_NUM — puts
     # the width guard UNDER the membership join: the join, the reps
@@ -586,7 +586,7 @@ def _minhash_candidate_pairs(spark: SparkSession, bands: DataFrame) -> DataFrame
     # doc_a — an AQE-managed shuffle sized off the THIN pre-expansion
     # input (67 tasks for a 40 GB-output stage at sf50, 2.3 GB peak
     # task memory — the borderline allocation behind r12's
-    # UNABLE_TO_ACQUIRE_MEMORY; tools/receipts/sf50_8g_probe_r13.txt).
+    # UNABLE_TO_ACQUIRE_MEMORY; tools/receipts/sf50_minhash_r13.txt).
     # Repartitioning on doc_a BEFORE the dedup makes hash(doc_a)
     # satisfy BOTH the (doc_a, doc_b) dedup distribution (equal pairs
     # share doc_a) and the verify join's clustering, so the dedup agg

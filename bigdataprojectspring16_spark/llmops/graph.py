@@ -394,7 +394,8 @@ def _count_materialize(df: DataFrame) -> int:
     metric (computed by accumulator during the same pass), where the
     r4-r13 signature aggregate paid a partial-agg job plus a
     single-partition final job per round. Measured (r14): 5 jobs per
-    star round -> 4, receipt ``tools/receipts/cc_jobs_r14.txt``.
+    star round -> 4; ``tools/cc_jobs_probe.py`` reproduces the per-round
+    split.
     """
     from pyspark.sql import Observation
 
@@ -468,8 +469,8 @@ def cc_with_rounds(
     probabilistic-signature pass cheaper than the r4-r13 scheme
     (sig-equality + exceptAll confirm needed a full extra round to
     observe that nothing changed). Fixture evidence: 4 rounds instead
-    of 5, jobs 57 -> 43 on the bench key
-    (``tools/receipts/cc_jobs_r14.txt``).
+    of 5, jobs 57 -> 43 on the bench key (``BENCH_r13.json`` ->
+    ``BENCH_r14.json``; the round count is pinned by tests/test_graph.py).
     """
     lazy = conf_knob(
         edges.sparkSession, LAZY_CHECKPOINT_CONF, LAZY_CHECKPOINT
@@ -618,7 +619,7 @@ def graph_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the survivor stats) are gone — the winner's struct already holds
     everything the final aggregate reads. Tail exchanges 8 -> 4,
     bench jobs 57 -> 43 with the r14 fixpoint probe
-    (``tools/receipts/cc_jobs_r14.txt``).
+    (``BENCH_r13.json`` -> ``BENCH_r14.json``).
     """
     d = load_table(spark, sf_dir, "documents")
     comp = components_over_docs(d, 0.95, carry=("n_chars", "lang"))

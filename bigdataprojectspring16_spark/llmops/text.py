@@ -889,11 +889,11 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # NO barrier here, by measurement (VERDICT r11 #5 proposed one;
     # r12 A/B at sf0.1 rejected it: barriered df_counts = 12 jobs /
-    # ~3.1 s vs this plan's 10 jobs / ~1.9 s, tools/receipts/
-    # boilerplate_barrier_ab_r12.txt). The double-join the advice
-    # targeted was already removed in r11 (src_sh re-derived from the
-    # distinct pair set below), and Catalyst gives the remaining
-    # "twice-computed" aggregate a ReusedExchange on sh's
+    # ~3.1 s vs this plan's 10 jobs / ~1.9 s,
+    # tools/receipts/boilerplate_barrier_ab_r12.txt). The double-join
+    # the advice targeted was already removed in r11 (src_sh
+    # re-derived from the distinct pair set below), and Catalyst gives
+    # the remaining "twice-computed" aggregate a ReusedExchange on sh's
     # shuffle-by-shingle, so the second aggregation only re-pays the
     # partial/final agg over already-shuffled blocks — cheaper than
     # materializing + re-reading the ~23M-row shingle-string frame a

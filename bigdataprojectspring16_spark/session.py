@@ -217,6 +217,15 @@ _STARTUP_CONFS: dict[str, str] = {
     # (tests/test_bucketing.py); kept out of the repo tree.
     "spark.sql.warehouse.dir": "/tmp/spark-graft-warehouse",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
+    # PySpark records the Python call site of every F.*/Column call
+    # (pyspark.errors.utils._with_origin), at ~5 Py4J round trips each
+    # — most of the Python plan-building time on a short query. The
+    # call site only feeds ANSI runtime errors ("DataFrame query
+    # context" with the expression's Python file:line); ANSI is off
+    # (ENGINE_CONFS), so the engine never raises them. What is lost:
+    # a runtime error would not name the Python line that built the
+    # failing expression. Static conf, read once per process.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

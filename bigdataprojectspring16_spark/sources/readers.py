@@ -9,6 +9,10 @@ data — never pay it.
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -31,6 +35,54 @@ def read_json(spark: SparkSession, path: str, schema: StructType | str) -> DataF
     return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
 
+#: Parquet schemas each session has inferred: path -> (stamp, schema).
+#: Weakly keyed by the session, like ``session._AUTO_SIZED``: what an
+#: inference yields depends on the session's parquet confs (the
+#: engine's ``nanosAsLong`` among them).
+_PARQUET_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _path_stamp(path: str) -> tuple[int, int] | None:
+    """(summed ``st_size``, newest ``mtime_ns``) over a parquet file or
+    every entry of a directory layout; rewriting it changes the stamp.
+    None when the local filesystem cannot stat it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    size, newest = st.st_size, st.st_mtime_ns
+    if stat.S_ISDIR(st.st_mode):
+        for root, dirs, files in os.walk(path):
+            for name in dirs + files:
+                try:
+                    sub = os.stat(os.path.join(root, name))
+                except OSError:
+                    continue
+                size += sub.st_size
+                newest = max(newest, sub.st_mtime_ns)
+    return size, newest
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet — schema from footers, columnar + predicate pushdown."""
-    return spark.read.parquet(path)
+    """Parquet — schema from footers once per session, columnar +
+    predicate pushdown.
+
+    Inferring the schema is a Spark job per read. The first read of a
+    path in a session pays it; every later read of the unchanged file
+    (same bytes and ``mtime_ns``) hands the inferred schema back
+    through ``spark.read.schema``, which starts no job. Each read is
+    still a fresh relation, so two reads of one table join as distinct
+    attributes. A path the local filesystem cannot stat is inferred on
+    every read.
+    """
+    stamp = _path_stamp(path)
+    seen = _PARQUET_SCHEMAS.setdefault(spark, {})
+    hit = seen.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        seen[path] = (stamp, df.schema)
+    return df
