@@ -45,7 +45,7 @@ def _grid_int(col: Column, scale: int) -> Column:
     tests/test_money_grid.py), but pure float arithmetic + an
     integral cast, where Spark's round() allocates a BigDecimal per
     row — measured 2x on the Q1 fact-sized aggregate
-    (tools/money_ab.py). The ORACLE side keeps the spelled-out
+    (tools/receipts/money_ab_r06.txt). The ORACLE side keeps the spelled-out
     ``CAST(round(x*100) AS BIGINT)``: different formula, same
     integer on the grid.
     """

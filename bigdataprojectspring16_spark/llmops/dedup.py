@@ -18,12 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.barriers import (
-    barrier,
-    conf_knob,
-    decade_regime,
-    scale_aware_storage,
-)
+from ..plans.barriers import barrier, decade_regime
 from ..registry import query
 from ..session import pinned_stage_width
 from ..tables import load_table
@@ -33,10 +28,10 @@ from ..tables import load_table
 #: signature table) get a LAZY localCheckpoint so each is evaluated
 #: once per query instead of once per reference (Catalyst has no
 #: cross-branch common-subexpression elimination; the r3 receipts
-#: showed 40-72 parquet scans in one near-dup plan).  Flag exists for
-#: the interleaved A/B in tools/dedup_barrier_ab.py; the shipped value
-#: records the measured verdict (SCALING.md §K): False — at fixture
-#: scale the barriers SERIALIZE the DAG (each checkpoint is a job
+#: showed 40-72 parquet scans in one near-dup plan).  The shipped
+#: value records the measured verdict (SCALING.md §CC, "The inverse
+#: result"): False — at fixture scale
+#: the barriers SERIALIZE the DAG (each checkpoint is a job
 #: boundary the scheduler must drain) and the lost pipelining costs
 #: more than the bounded number of re-evaluations saves
 #: (dedup_minhash_lsh -19.8% median, B slower in 5/5 interleaved
@@ -55,8 +50,18 @@ MATERIALIZE_SHARED = False
 MATERIALIZE_SHARED_CONF = "spark.bigdataprojectspring16.materializeShared"
 
 
-def _materialize_shared(df):
-    return conf_knob(df.sparkSession, MATERIALIZE_SHARED_CONF, MATERIALIZE_SHARED)
+def _conf_flag(spark: SparkSession, key: str, default) -> bool:
+    """An on/off session conf; the module global is the default."""
+    v = str(spark.conf.get(key, None) or default).strip().lower()
+    if v in ("1", "true", "yes", "on"):
+        return True
+    if v in ("0", "false", "no", "off"):
+        return False
+    raise ValueError(f"{key}={v!r}: expected on | off")
+
+
+def _materialize_shared(df: DataFrame) -> bool:
+    return _conf_flag(df.sparkSession, MATERIALIZE_SHARED_CONF, MATERIALIZE_SHARED)
 
 
 #: Exact-verify token coding (SCALING.md §SF100, VERDICT r11 #3).
@@ -67,8 +72,9 @@ def _materialize_shared(df):
 #: replaced by its xxhash64 code (8 B fixed-width vs ~15 B strings;
 #: a pair's verdict flips only if two DISTINCT tokens inside that
 #: pair's union collide in 64 bits — P < n²/2⁶⁵ ≈ 1e-15 per pair at
-#: ~150-token sets). Values: ``on`` (default) | ``off`` | ``auto``
-#: (codes only in the decade regime). Default ON by measurement
+#: ~150-token sets). Values: ``on`` (default) | ``off`` (the string
+#: form, kept as the reference the coded plan is pinned against).
+#: Default ON by measurement
 #: (tools/receipts/verify_codes_ab_r12.txt): all five coded keys
 #: hash-IDENTICAL to the string form at sf0.1 with the SAME job
 #: counts; fair warmed walls are -22% on the gram-based keys,
@@ -91,18 +97,7 @@ NEAR_DUP_JACCARD = 0.95
 
 
 def verify_token_codes(spark: SparkSession) -> bool:
-    v = str(
-        spark.conf.get(VERIFY_TOKEN_CODES_CONF, None) or VERIFY_TOKEN_CODES
-    ).strip().lower()
-    if v in ("1", "true", "yes", "on"):
-        return True
-    if v in ("0", "false", "no", "off"):
-        return False
-    if v == "auto":
-        return decade_regime(spark)
-    raise ValueError(
-        f"{VERIFY_TOKEN_CODES_CONF}={v!r}: expected on | off | auto"
-    )
+    return _conf_flag(spark, VERIFY_TOKEN_CODES_CONF, VERIFY_TOKEN_CODES)
 
 
 def coded_verify_side(t: DataFrame, set_col: str, alias: str) -> DataFrame:
@@ -224,8 +219,8 @@ def contract_identical_sets(t: DataFrame, set_col: str = "toks"):
     # avoidable cost; the checkpoint stores only (doc_id, set) rows.
     if not _materialize_shared(t):
         return reps, members
-    st = scale_aware_storage(reps.sparkSession)
-    return barrier(reps, storage=st), barrier(members, storage=st)
+    disk = decade_regime(reps.sparkSession)
+    return barrier(reps, disk=disk), barrier(members, disk=disk)
 
 
 def expand_rep_pairs(
@@ -349,7 +344,7 @@ def prefix_filter_candidates(
     width = pinned_stage_width(t.sparkSession)
     prefix = prefix.repartition(width, "term")
     if _materialize_shared(t):
-        prefix = barrier(prefix, storage=scale_aware_storage(t.sparkSession))
+        prefix = barrier(prefix, disk=decade_regime(t.sparkSession))
     # ^ lazy barrier AFTER the pinned repartition: both join sides
     # below reference `prefix`, and without it each side re-runs the
     # explode + document-frequency + window lineage (no cross-branch
@@ -548,7 +543,7 @@ def _minhash_bands_frame(spark: SparkSession, t: DataFrame) -> DataFrame:
         # Lazy barrier: the band self-join below references this frame
         # twice; without it each side re-runs the 16-way minhash
         # aggregation over the exploded token stream.
-        bands = barrier(bands, storage=scale_aware_storage(spark))
+        bands = barrier(bands, disk=decade_regime(spark))
     return bands
 
 

@@ -33,118 +33,21 @@ grouping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.barriers import (
-    BARRIER_STORAGE_CONF,
-    barrier,
-    conf_knob,
-    decade_regime,
-)
+from ..plans.barriers import barrier, decade_regime
 from ..registry import query
 from ..tables import load_table
 
 MAX_ITERATIONS = 25
 
-#: When True, each round's localCheckpoint is lazy (eager=False) and
-#: is materialized BY the round's signature aggregate — one Spark job
-#: per round instead of two (checkpoint job + sig job), with lineage
-#: still truncated.  Shipped True: three interleaved A/Bs
-#: (tools/cc_ab_experiment.py, r4) measured 9.9% / 5.3% / 12.0%
-#: median reductions on graph_cluster_keep_best at sf0.1, B ≤ A in
-#: 13 of 19 pairs — consistent direction, see SCALING.md §CC.
-LAZY_CHECKPOINT = True
-LAZY_CHECKPOINT_CONF = "spark.bigdataprojectspring16.lazyCheckpoint"
-
-#: Gate for the loop-invariant-frame checkpoints in
-#: graph_pagerank_rounds (edge set / degrees / node set).  See the
-#: measured verdict in SCALING.md §CC; tools/pagerank_barrier_ab.py
-#: reproduces the A/B.
-MATERIALIZE_INVARIANTS = True
-MATERIALIZE_INVARIANTS_CONF = (
-    "spark.bigdataprojectspring16.materializeInvariants"
+#: Columns the label pipeline creates or reads internally; a ``carry``
+#: column with one of these names would shadow them.
+_RESERVED_CARRY = (
+    "doc_id", "text", "toks", "set_key", "rep", "src", "dst", "node",
+    "component",
 )
-
-#: Edge-build strategy for graph_pagerank_rounds: "group" (default,
-#: r5) aggregates per-order part lists and generates each unordered
-#: co-order pair ONCE from the sorted array (combination expansion is
-#: narrow — no shuffle), so the dominating global distinct dedups
-#: |pairs|/2 rows and the directed edge set is recovered by a
-#: shuffle-free union with the swapped copy; "selfjoin" (r3/r4 form)
-#: self-joins lineitem on the order key and dedups both directions.
-#: A/B receipt: tools/pagerank_edge_ab.py → SCALING.md §PR.
-PAGERANK_EDGE_BUILD = "group"
-PAGERANK_EDGE_BUILD_CONF = (
-    "spark.bigdataprojectspring16.pagerankEdgeBuild"
-)
-
-#: r11 (VERDICT r10 item 2 — the sf10/8 g envelope): every fact-sized
-#: aggregate in graph_pagerank_rounds (edge-set distinct, node-set
-#: distinct, degree count, per-round inflow sum) is preceded by an
-#: explicit hash repartition on its GROUP KEY at
-#: session.pinned_stage_width. Without it, the partial (map-side)
-#: hash aggregation runs on whatever partitioning the upstream stage
-#: left (AQE-coalesced ~64 MB join slices at sf10), so each task's
-#: BytesToBytesMap grows toward |nodes| DISTINCT keys — ~100-200 MB
-#: x 32 concurrent tasks — and under session memory pressure
-#: (unevictable barrier blocks + a long driver-sim batch) the map
-#: cannot even allocate its initial page: the measured
-#: AGGREGATE_OUT_OF_MEMORY / UNABLE_TO_ACQUIRE_MEMORY failure
-#: (tools/receipts/sf10_family_audit_b3A4_r10.txt, stage 144). With
-#: the repartition, the aggregate runs AFTER the exchange on
-#: key-sliced partitions (≤ |nodes|/width distinct keys per task),
-#: so per-task aggregation state is bounded BY CONSTRUCTION — the
-#: same pinned-width discipline that closed the threshold-sweep 8 g
-#: caveat in r10. MEASURED (r11, local[32], results hash-identical
-#: in every arm): sharding EVERY aggregate loses wall at every
-#: decade — sf0.1 9.1 s vs 5.7 s, sf1 52-55 s vs 15-17 s, sf10/8 g
-#: 923 s vs 293 s — because deg/nodes/inflow genuinely combine
-#: map-side (3-10x) and un-combined full-width shuffles of the
-#: 240M-row edge frame thrash the same memory the shard protects.
-#: But the UNSHARDED sf10/8 g run is FLAKY: the pair-distinct's
-#: partial map (per-task expanded pairs, ~80% distinct — combine
-#: ratio only ~1.25) grows to hundreds of MB x 32 tasks, and 2 of 3
-#: r11 runs died there with AGGREGATE_OUT_OF_MEMORY (stage 14 —
-#: same class as the r10 b3A4 receipt) while the third squeaked
-#: through on storage-eviction luck. Hence ``auto`` (default):
-#: shard ONLY the pair distinct, only when the input-byte autosizer
-#: has raised width ≥ 64x parallelism (the measured-OOM decade
-#: regime: sf10's 4096 at local[32]; sf0.1/sf1 plans untouched —
-#: sf1 is receipt-green unsharded since r7 and the auto arm costs
-#: 2x there). That converts the one
-#: barely-combining, OOM-prone aggregate to bounded key-sliced
-#: state at ~zero extra shuffle volume. The per-round INFLOW sum
-#: joined the auto set after attempt 4: its partial map (distinct
-#: target nodes per AQE-coalesced join slice, ~1.7M keys x 32
-#: tasks) hit the same UNABLE_TO_ACQUIRE_MEMORY wall in round
-#: stages; its sf10 combine ratio (~1.25-3x) makes the un-combined
-#: shuffle a moderate price for bounded maps. deg/nodes keep their
-#: partial aggregation (real 3-30x combine, never a measured
-#: failure site) in auto. In the same
-#: decade regime the loop-invariant barriers go DISK_ONLY (the
-#: deserialized edge blocks alone are ~7 GB at sf10 — unevictable
-#: residency that starved the pool into a plain heap OOM even with
-#: the pair-shard, r11 attempt 3; on one box the re-reads ride the
-#: OS page cache, on a cluster each executor's local disk). ``on`` =
-#: the fully-bounded-state arm (every aggregate sharded + disk
-#: barriers); ``off`` = the pre-r11 plan.
-PAGERANK_SHARDED_AGG = "auto"
-PAGERANK_SHARDED_AGG_CONF = (
-    "spark.bigdataprojectspring16.pagerankShardedAgg"
-)
-
-#: Star-round implementation for the CC fixpoint: "window" (default,
-#: r7) computes each round's neighborhood minimum with ONE window
-#: aggregate over the edge frame — one shuffle per star — where the
-#: r3-r6 "groupjoin" form paid a groupBy shuffle PLUS a join shuffle
-#: per star (~5 exchanges per large+small round vs ~3). Same output
-#: set by construction (the window min is the same per-key min the
-#: groupBy computed; tests/test_graph.py pins equality on adversarial
-#: graphs and tests/test_barrier_knobs.py across knob settings).
-#: A/B receipt: tools/cc_star_ab.py -> SCALING.md §CC, r7.
-CC_STAR_IMPL = "window"
-CC_STAR_IMPL_CONF = "spark.bigdataprojectspring16.ccStarImpl"
 
 
 def _near_dup_edges(d: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -187,10 +90,17 @@ def _near_dup_edge_parts(
     leakage split's lang) can read them off the labeled frame instead
     of paying a join back onto ``documents`` — two exchanges per
     consumer removed for a few bytes per spoke row. ``carry=()``
-    leaves every plan byte-identical to the r13 shape.
+    leaves every plan byte-identical to the r13 shape. A ``carry``
+    name that collides with an internal column raises ``ValueError``.
     """
     from .dedup import prefix_filter_candidates
 
+    clash = sorted(set(carry) & set(_RESERVED_CARRY))
+    if clash:
+        raise ValueError(
+            f"carry={carry!r}: {clash} shadow internal columns "
+            f"{_RESERVED_CARRY}"
+        )
     t = d.select(
         "doc_id",
         *carry,
@@ -273,15 +183,6 @@ def components_over_docs(
     ).unionByName(member_labels)
 
 
-def _star_impl(spark: SparkSession) -> str:
-    impl = spark.conf.get(CC_STAR_IMPL_CONF, None) or CC_STAR_IMPL
-    if impl not in ("window", "groupjoin"):
-        raise ValueError(
-            f"{CC_STAR_IMPL_CONF}={impl!r}: expected 'window' or 'groupjoin'"
-        )
-    return impl
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: for each node u, connect every strictly
     larger neighbor to min(Γ(u) ∪ {u}).
@@ -292,38 +193,24 @@ def _large_star(edges: DataFrame) -> DataFrame:
     (min) — the round's single trailing distinct dedups everything.
 
     The neighborhood minimum is a WINDOW aggregate over the src
-    partition (r7, CC_STAR_IMPL): every input row needs (src, dst, m)
-    together, and a window delivers m in the SAME single shuffle that
-    groups the rows, where the r3-r6 groupBy+join form shuffled the
-    frame twice (once to aggregate, once to join m back). The
-    entire-partition frame is executed by WindowExec with a
-    buffered, SPILLABLE per-key row array (ADVICE r7: an unbounded
-    frame is not a running aggregate), so a hub node's neighborhood
-    is materialized in one task's window buffer — the same
-    memory/skew exposure as the join form, which shuffles the full
-    frame on the same key; the win is the saved second shuffle
-    (measured −14.7% wall, jobs 75→55: receipts/cc_star_ab_r07.txt).
+    partition (r7): every input row needs (src, dst, m) together, and
+    a window delivers m in the SAME single shuffle that groups the
+    rows, where the r3-r6 groupBy+join form shuffled the frame twice
+    (once to aggregate, once to join m back). The entire-partition
+    frame is executed by WindowExec with a buffered, SPILLABLE per-key
+    row array (ADVICE r7: an unbounded frame is not a running
+    aggregate), so a hub node's neighborhood is materialized in one
+    task's window buffer — the same memory/skew exposure as the join
+    form, which shuffles the full frame on the same key; the win is
+    the saved second shuffle (measured −14.7% wall, jobs 75→55:
+    tools/receipts/cc_star_ab_r07.txt).
     """
     nbr = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if _star_impl(edges.sparkSession) == "window":
-        from pyspark.sql import Window
-
-        m = F.least(
-            F.min("dst").over(Window.partitionBy("src")), F.col("src")
-        )
-        return (
-            nbr.withColumn("m", m)
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-        )
-    mins = nbr.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        nbr.join(mins, "src")
+        nbr.withColumn("m", m)
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -342,39 +229,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     (v → m) and its self edge (u → m) through one narrow explode —
     the self edge appears once per input row instead of once per u,
     which the trailing distinct (already required by the fold) absorbs
-    for free; the groupjoin form paid a second shuffle to join the
-    mins back.
+    for free; the r3-r6 groupBy+join form paid a second shuffle to
+    join the mins back.
     """
     e = edges.select(
         F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
     ).where(F.col("u") != F.col("v"))
-    if _star_impl(edges.sparkSession) == "window":
-        from pyspark.sql import Window
-
-        m = F.min("v").over(Window.partitionBy("u"))
-        return (
-            e.withColumn("m", m)
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("v").alias("src"), F.col("m").alias("dst")
-                        ),
-                        F.struct(
-                            F.col("u").alias("src"), F.col("m").alias("dst")
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.src", "p.dst")
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-    mins = e.groupBy("u").agg(F.min("v").alias("m"))
-    folded = e.join(mins, "u").select(F.col("v").alias("src"), F.col("m").alias("dst"))
-    self_edge = mins.select(F.col("u").alias("src"), F.col("m").alias("dst"))
+    m = F.min("v").over(Window.partitionBy("u"))
     return (
-        folded.unionByName(self_edge)
+        e.withColumn("m", m)
+        .select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("v").alias("src"), F.col("m").alias("dst")),
+                    F.struct(F.col("u").alias("src"), F.col("m").alias("dst")),
+                )
+            ).alias("p")
+        )
+        .select("p.src", "p.dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -394,8 +266,7 @@ def _count_materialize(df: DataFrame) -> int:
     metric (computed by accumulator during the same pass), where the
     r4-r13 signature aggregate paid a partial-agg job plus a
     single-partition final job per round. Measured (r14): 5 jobs per
-    star round -> 4; ``tools/cc_jobs_probe.py`` reproduces the per-round
-    split.
+    star round -> 4 (SCALING.md §CC).
     """
     from pyspark.sql import Observation
 
@@ -471,23 +342,22 @@ def cc_with_rounds(
     observe that nothing changed). Fixture evidence: 4 rounds instead
     of 5, jobs 57 -> 43 on the bench key (``BENCH_r13.json`` ->
     ``BENCH_r14.json``; the round count is pinned by tests/test_graph.py).
+    Raises ``RuntimeError`` when ``MAX_ITERATIONS`` rounds pass without
+    reaching the fixpoint, rather than return labels that may be wrong.
     """
-    lazy = conf_knob(
-        edges.sparkSession, LAZY_CHECKPOINT_CONF, LAZY_CHECKPOINT
-    )
+    # Lazy round barriers: each is materialized BY the round's own
+    # counting write — one job per barrier instead of a checkpoint job
+    # plus a probe job, lineage still truncated (SCALING.md §CC, r4).
     e = barrier(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .where(F.col("src") != F.col("dst"))
-        .distinct(),
-        eager=not lazy,
+        .distinct()
     )
     prev_n = _count_materialize(e)
-    rounds = 0
-    for _ in range(MAX_ITERATIONS):
-        rounds += 1
-        new = barrier(_small_star(_large_star(e)), eager=not lazy)
+    for rounds in range(1, MAX_ITERATIONS + 1):
+        new = barrier(_small_star(_large_star(e)))
         # The noop write materializes the round's checkpoint (the next
         # round references it twice, so it must be stored first) and
         # carries the row count as a free observe metric.
@@ -503,6 +373,11 @@ def cc_with_rounds(
         e, prev_n = new, n_new
         if converged:
             break
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {MAX_ITERATIONS} "
+            "star rounds"
+        )
     # Fixpoint is a star per component: src (member) -> dst (= root,
     # the component min). Roots and isolated nodes label themselves.
     stars = e.groupBy(F.col("src").alias("node")).agg(F.min("dst").alias("component"))
@@ -713,103 +588,35 @@ def graph_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import pinned_stage_width
 
     li = load_table(spark, sf_dir, "lineitem")
-    mat = conf_knob(
-        spark, MATERIALIZE_INVARIANTS_CONF, MATERIALIZE_INVARIANTS
-    )
-    shard_mode = str(
-        spark.conf.get(PAGERANK_SHARDED_AGG_CONF, None)
-        or PAGERANK_SHARDED_AGG
-    ).lower()
-    if shard_mode not in ("auto", "on", "off"):
-        raise ValueError(
-            f"{PAGERANK_SHARDED_AGG_CONF}={shard_mode!r}: "
-            "expected auto | on | off"
-        )
-    width = pinned_stage_width(spark)
-    # auto: shard ONLY the edge-pair distinct, and only in the decade
-    # regime (autosized width ≥ 64x the scheduler's parallelism —
-    # sf10 → 4096 at local[32]; sf1's 1024 and sf0.1's 64 both stay
-    # UNSHARDED, keeping the bench plan and its measured walls —
-    # sf1 receipt-green unsharded at 8 g since r7). The pair
-    # distinct is where the measured 8 g OOM lives: its partial map
-    # holds the task's expanded pairs, which are ~80% DISTINCT
-    # (combine ratio ~1.25), so the map grows to hundreds of MB per
-    # task while the skipped combine costs almost no extra shuffle
-    # volume — sharding it is nearly free and removes the failure.
-    # deg/nodes/inflow keep their partial aggregation in auto: their
-    # combine ratios are real (3-10x) and their maps are ~|nodes|
-    # keys of fixed-width longs, the spill-friendly shape; "on"
-    # shards those too (the fully-bounded-state arm, measured 3x
-    # slower at every decade).
-    # "decade" = the measured-OOM regime only: autosized width ≥ 64x
-    # parallelism (sf10's 4096 at local[32]). sf1's 1024-width runs
-    # have been receipt-green UNSHARDED at 8 g since r7 and the auto
-    # arm costs 2x there (31.6 s vs 15-17 s, r11) — robustness tax is
-    # paid exactly where failure was measured, nowhere else.
+    # Everything scale-dependent below switches on ONE condition, the
+    # decade regime (autosized width ≥ 64x parallelism: sf10's 4096 at
+    # local[32]; sf0.1's 64 and sf1's 1024 stay below it, keeping the
+    # bench plan and the sf1 receipts, green unsharded at 8 g since
+    # r7). The history of each choice is SCALING.md §PR and §PR8G.
+    # In the decade regime the pair distinct and the per-round inflow
+    # sum are key-sliced at the pinned width, so each task's hash map
+    # is bounded by |keys|/width: they are the two measured 8 g
+    # AGGREGATE_OUT_OF_MEMORY sites
+    # (tools/receipts/sf10_family_audit_b3A4_r10.txt, r11), and their
+    # partial maps barely combine (~1.25x), so the skipped combine
+    # costs almost no shuffle volume. deg/nodes keep their partial
+    # aggregation (real 3-30x combine, never a failure site); sharding
+    # every aggregate measured 3x slower at every decade (r11).
     decade = decade_regime(spark)
-    in_auto = shard_mode == "on" or (shard_mode == "auto" and decade)
-    shard_all = shard_mode == "on"
-    # Decade regime: pin the loop-invariant barriers to DISK_ONLY
-    # blocks. Deserialized edge-barrier blocks measure ~200 MB x 32+
-    # partitions at sf10 (~7 GB) — unevictable residency that starves
-    # the 8 g unified pool into AGGREGATE_OUT_OF_MEMORY / plain heap
-    # OOM (r11 receipts). DISK_ONLY keeps the pool free; re-reads ride
-    # the OS page cache locally and an executor's local disk on a
-    # cluster. Below the decade width the frames fit and the stock
-    # (session-conf) placement stays. An EXPLICIT session
-    # barrierStorage choice outranks this pin (ADVICE r11 — the
-    # override semantics now match scale_aware_storage: "an explicit
-    # session choice wins everywhere", including under shard=on).
-    inv_storage = (
-        None
-        if spark.conf.get(BARRIER_STORAGE_CONF, None) is not None
-        else "disk"
-        if shard_mode == "on" or (shard_mode == "auto" and decade)
-        else None
-    )
+    width = pinned_stage_width(spark)
 
-    def shard(
-        df: DataFrame, *cols: str, always: bool = False
-    ) -> DataFrame:
-        """Key-slice an aggregate's input so its per-task hash map is
-        bounded by |keys|/width (see PAGERANK_SHARDED_AGG).
-        ``always=True`` marks the aggregates sharded under
-        auto+decade (pair distinct, per-round inflow — the two
-        measured OOM sites); the rest shard only under "on"."""
-        gate = in_auto if always else shard_all
-        return df.repartition(width, *cols) if gate else df
-
-    conf_strategy = spark.conf.get(PAGERANK_EDGE_BUILD_CONF, None)
-    strategy = conf_strategy or PAGERANK_EDGE_BUILD
-    if strategy not in ("group", "selfjoin"):
-        raise ValueError(
-            f"{PAGERANK_EDGE_BUILD_CONF}={strategy!r}: "
-            "expected 'group' or 'selfjoin'"
-        )
-    if conf_strategy is None and in_auto and decade:
-        # Decade regime (unless the session pinned the knob): build
-        # edges by the orderkey SELF-JOIN, not the grouped-array
-        # expansion. The group build wins ~20% wall at fixture scale
-        # (r5 A/B) but its collect_set buffers and per-row pair
-        # arrays are plain on-heap objects OUTSIDE the managed memory
-        # pool — at sf10/8 g they are the one remaining allocation
-        # class that can OOM the heap before any spill can engage
-        # (r11 fullcheck attempt: 64-128 MB GCLocker array
-        # allocations, java.lang.OutOfMemoryError in the edge-build
-        # stage). The self-join form is SMJ + sharded distinct
-        # end-to-end: every byte lives in managed, spillable
-        # operators.
-        strategy = "selfjoin"
     # The edge set, degrees, and node set are loop-INVARIANT but appear
     # in every unrolled round, and Catalyst performs no cross-round
     # common-subexpression elimination: without a materialization
     # barrier the r3 plan re-derived them per round — 32 lineitem scans
     # and 64 aggregates in one query (PLANS.md r3 receipt).  Lazy
-    # barriers materialize each ONCE under the final action
-    # (still no driver loop, still a single declared plan) and every
-    # round re-reads the stored blocks.  Gated by
-    # MATERIALIZE_INVARIANTS (A/B: tools/pagerank_barrier_ab.py).
-    if strategy == "group":
+    # barriers materialize each ONCE under the final action (still no
+    # driver loop, still a single declared plan) and every round
+    # re-reads the stored blocks (+6.5% median, SCALING.md §CC). In the
+    # decade regime they go DISK_ONLY: the deserialized edge blocks
+    # alone are ~7 GB at sf10, unevictable residency that starved the
+    # 8 g pool into a heap OOM even with the pair shard (r11).
+    if not decade:
         # r5: one keyed aggregate builds the sorted per-order part
         # set; each unordered pair is generated ONCE (u < v) by a
         # narrow combination expansion over the array — the dominant
@@ -817,6 +624,8 @@ def graph_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         # form, and the directed edge set is recovered shuffle-free
         # by unioning the swapped copy of the (barriered) undirected
         # set.  Per-order fan-out is lines-per-order²/2, same bound.
+        # Measured ~20% faster than the self-join below
+        # (tools/receipts/pagerank_edge_ab_r05.txt).
         und = (
             li.groupBy("l_orderkey")
             .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
@@ -836,15 +645,21 @@ def graph_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("p")
             )
             .select("p.u", "p.v")
-            .transform(lambda df: shard(df, "u", "v", always=True))
             .distinct()
         )
-        if mat:
-            und = barrier(und, storage=inv_storage)
+        und = barrier(und)
         e0 = und.unionByName(
             und.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
     else:
+        # Decade regime: build edges by the orderkey SELF-JOIN. The
+        # group build's collect_set buffers and per-row pair arrays
+        # are plain on-heap objects OUTSIDE the managed memory pool —
+        # at sf10/8 g the one allocation class that can OOM the heap
+        # before any spill can engage (r11 fullcheck attempt: 64-128
+        # MB GCLocker array allocations in the edge-build stage). The
+        # self-join form is SMJ + sharded distinct end-to-end: every
+        # byte lives in managed, spillable operators.
         a = li.select(
             F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("u")
         )
@@ -855,19 +670,16 @@ def graph_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             a.join(b, "okey")
             .where(F.col("u") != F.col("v"))
             .select("u", "v")
-            .transform(lambda df: shard(df, "u", "v", always=True))
+            .repartition(width, "u", "v")
             .distinct()
         )
-        if mat:
-            e0 = barrier(e0, storage=inv_storage)
-    nodes = shard(
-        li.select(F.col("l_partkey").alias("pid")), "pid"
-    ).distinct()
-    if mat:
-        nodes = barrier(nodes, storage=inv_storage)
-    deg = shard(e0, "u").groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    if mat:
-        deg = barrier(deg, storage=inv_storage)
+        e0 = barrier(e0, disk=True)
+    nodes = barrier(
+        li.select(F.col("l_partkey").alias("pid")).distinct(), disk=decade
+    )
+    deg = barrier(
+        e0.groupBy("u").agg(F.count(F.lit(1)).alias("d")), disk=decade
+    )
     ranks = nodes.select("pid", F.lit(1.0).alias("pr"))
     for _ in range(3):
         # §MONEY r8: exact inflow — floor-quantize each edge's pr/d
@@ -884,11 +696,9 @@ def graph_pagerank_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("pr") / F.col("d") * F.lit(1e9)).alias("c_q"),
             )
         )
-        inflow = (
-            shard(contrib, "pid", always=True)
-            .groupBy("pid")
-            .agg(F.sum("c_q").alias("inflow_q"))
-        )
+        if decade:
+            contrib = contrib.repartition(width, "pid")
+        inflow = contrib.groupBy("pid").agg(F.sum("c_q").alias("inflow_q"))
         ranks = nodes.join(inflow, "pid", "left").select(
             "pid",
             F.round(

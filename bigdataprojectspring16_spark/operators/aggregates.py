@@ -52,7 +52,7 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     disc_price is a 4-dp quantity and charge a 6-dp one, so rounding
     a FLOAT sum of them to 2 dp sits on half-cent boundaries (the
     q10 class). A flat decimal(38,0) sum is exact but ~3x slower on
-    the fact-sized aggregate (measured: tools/money_ab.py, 0.47s ->
+    the fact-sized aggregate (measured: tools/receipts/money_ab_r06.txt, 0.47s ->
     1.38s at sf0.1), so Q1 uses the HIERARCHICAL exact sum: level 1
     aggregates per (group, partition id) in plain BIGINT — exact
     because one task's rows are input-size-bounded — and the partial

@@ -4,6 +4,9 @@ The iterative/fixpoint plans (connected components, the unrolled
 PageRank rounds, the shared dedup signature frames) need a
 *materialization barrier*: a point where a frame is computed once and
 later references read stored blocks instead of re-deriving lineage.
+Every barrier is LAZY: the first action over the frame materializes
+it, so a declared query stays a single driver action (SCALING.md §CC
+measured the lazy form ahead of an eager job per barrier).
 ``localCheckpoint`` is the single-node/fixture-scale tool — but its
 blocks are executor-local and UNREPLICATED, so on a real cluster one
 lost executor kills the query (the lineage is truncated; Spark cannot
@@ -12,11 +15,11 @@ session-conf choice so the same declared plan runs:
 
 - ``local``      (default) lazy ``localCheckpoint`` — fastest, the
                  measured fixture-scale winner (SCALING.md §CC);
-- ``eager``      eager ``localCheckpoint`` — a job per barrier;
-- ``durable``    ``checkpoint()`` to the reliable checkpoint dir
+- ``durable``    lazy ``checkpoint()`` to the reliable checkpoint dir
                  (``SparkContext.setCheckpointDir`` — HDFS/S3 on a
                  cluster) — survives any executor loss; the 100 TB
-                 deployment path for multi-hour fixpoints.
+                 deployment path for multi-hour fixpoints
+                 (tools/receipts/durable_barrier_sf1_r10.txt).
 
 A ``persist(MEMORY_AND_DISK_2)`` mode was tried and REJECTED (r5,
 measured): persist replicates blocks but does NOT truncate lineage,
@@ -28,17 +31,11 @@ QueryExecution.explainString). Lineage truncation is a correctness-
 of-operation requirement for unbounded fixpoints, which only the
 checkpoint family provides; replication alone is not a substitute.
 
-Equivalence of all modes is pinned by tests/test_barrier_knobs.py —
+Equivalence of both modes is pinned by tests/test_barrier_knobs.py —
 the barrier changes physical materialization only, never results.
-
-Per ADVICE r4, knobs are read from session conf at plan-construction
-time (per-session, race-free) with the module globals as defaults, so
-single-process tools/tests may still flip the globals.
 """
 
 from __future__ import annotations
-
-import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -46,54 +43,7 @@ from pyspark.storagelevel import StorageLevel
 #: Session-conf key selecting the barrier mechanism (values above).
 BARRIER_MODE_CONF = "spark.bigdataprojectspring16.barrierMode"
 
-#: Session-conf key for the local-barrier block placement: ``memory``
-#: (default — Spark's stock MEMORY_AND_DISK) or ``disk`` (DISK_ONLY).
-BARRIER_STORAGE_CONF = "spark.bigdataprojectspring16.barrierStorage"
-
-_MODES = ("local", "eager", "durable")
-
-
-def _storage_to_level(choice: str) -> StorageLevel | None:
-    """``memory`` = Spark's stock localCheckpoint level (deserialized
-    rows — fastest re-read); ``memory_ser`` = MEMORY_AND_DISK
-    serialized (~2-3x smaller resident blocks, one deser pass per
-    re-read); ``disk`` = DISK_ONLY (zero unified-pool residency)."""
-    if choice == "memory":
-        return None
-    if choice == "memory_ser":
-        return StorageLevel.MEMORY_AND_DISK
-    if choice == "disk":
-        return StorageLevel.DISK_ONLY
-    raise ValueError(
-        f"barrier storage {choice!r}: expected memory | memory_ser | disk"
-    )
-
-
-def _local_barrier_level(spark: SparkSession) -> StorageLevel | None:
-    """Storage level for local-mode barrier blocks; ``None`` = Spark's
-    default (MEMORY_AND_DISK).
-
-    Local-checkpoint blocks are UNEVICTABLE (evicting them would break
-    the truncated lineage), so memory-resident barrier frames occupy
-    the unified pool for the life of the query. ``disk`` trades that
-    residency for one spill write + re-reads per barrier — the lever a
-    memory-constrained single-JVM deployment can pull without touching
-    code. Measured at sf10/8 g (r10): CC passes under BOTH levels
-    (memory 113 s, disk 124 s), so the stock level stays the default;
-    the sf10 PageRank OOM is execution-side (its edge aggregates, not
-    block residency — disk barriers do not rescue it; the documented
-    envelope is 24 g single-JVM, receipts b3A5/r9, while a real
-    cluster distributes both blocks and aggregation state across
-    executors).
-    """
-    choice = spark.conf.get(BARRIER_STORAGE_CONF, "memory")
-    try:
-        return _storage_to_level(choice)
-    except ValueError:
-        raise ValueError(
-            f"{BARRIER_STORAGE_CONF}={choice!r}: "
-            "expected memory | memory_ser | disk"
-        ) from None
+_MODES = ("local", "durable")
 
 
 def barrier_mode(spark: SparkSession) -> str:
@@ -106,79 +56,34 @@ def barrier_mode(spark: SparkSession) -> str:
     return mode
 
 
-def barrier(
-    df: DataFrame, eager: bool = False, storage: str | None = None
-) -> DataFrame:
-    """Materialization barrier under the session's barrier mode.
+def barrier(df: DataFrame, disk: bool = False) -> DataFrame:
+    """Lazy materialization barrier under the session's barrier mode.
 
-    ``eager`` is honored by the ``local`` / ``durable`` modes;
-    ``eager`` mode is eager by definition. ``storage`` (local modes
-    only) lets a CALL SITE pin this barrier's block placement
-    (memory | memory_ser | disk) when it knows the frame's shape —
-    e.g. graph_pagerank_rounds stores its decade-scale edge barrier
-    serialized-or-disk so ~7 GB of deserialized row blocks never
-    squeeze the 8 g unified pool (r11); the session-wide
-    ``barrierStorage`` conf still governs every unpinned barrier.
+    ``disk=True`` (local mode) stores the blocks DISK_ONLY instead of
+    Spark's stock MEMORY_AND_DISK. Local-checkpoint blocks are
+    UNEVICTABLE (evicting them would break the truncated lineage), so
+    memory-resident corpus-sized frames occupy the unified pool for
+    the life of the query — the measured single-JVM failure class at
+    the decades (r11: the pagerank edge barrier at sf10, the minhash
+    token-set/band barriers at sf100, both plain heap OOMs at the
+    default 8 g). Call sites pass ``disk=decade_regime(spark)`` for
+    shared data-proportional frames; locally the re-reads ride the OS
+    page cache, on a cluster each executor's local disk. Below the
+    decade the stock level stays (r10: CC at sf10 memory 113 s vs
+    disk 124 s).
     """
-    mode = barrier_mode(df.sparkSession)
-    if mode == "durable":
+    if barrier_mode(df.sparkSession) == "durable":
         if df.sparkSession.sparkContext.getCheckpointDir() is None:
             raise RuntimeError(
                 "barrierMode=durable requires "
                 "SparkContext.setCheckpointDir(<reliable storage>)"
             )
-        return df.checkpoint(eager=eager)
-    if storage is not None:
-        level = _storage_to_level(storage)
-    else:
-        level = _local_barrier_level(df.sparkSession)
-    if level is not None:
+        return df.checkpoint(eager=False)
+    if disk:
         return df.localCheckpoint(
-            eager=eager or mode == "eager", storageLevel=level
+            eager=False, storageLevel=StorageLevel.DISK_ONLY
         )
-    return df.localCheckpoint(eager=eager or mode == "eager")
-
-
-def conf_knob(spark: SparkSession, conf_key: str, module_default: bool) -> bool:
-    """Boolean knob: session conf wins, module global is the default.
-
-    Routing reads through session conf (ADVICE r4) means concurrent
-    query construction in different sessions can hold different knob
-    settings without racing on module state; the module globals remain
-    the single-process default and the A/B-tool surface.
-    """
-    v = spark.conf.get(conf_key, None)
-    if v is None:
-        return module_default
-    low = str(v).strip().lower()
-    if low in ("1", "true", "yes", "on"):
-        return True
-    if low in ("0", "false", "no", "off"):
-        return False
-    raise ValueError(f"{conf_key}={v!r}: expected a boolean value")
-
-
-@contextlib.contextmanager
-def knob(spark: SparkSession, conf_key: str, value):
-    """Session-conf knob override for the duration of a block.
-
-    The race-free A/B surface (VERDICT r5 item 7): flipping a module
-    global races any query constructed concurrently in the same
-    process, and the flip leaks if the experiment dies mid-arm. A
-    conf override is scoped to this session, is read at
-    plan-construction time by :func:`conf_knob` /
-    ``spark.conf.get``, and is restored (or unset) on exit even on
-    error. The module globals stay immutable defaults.
-    """
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(value))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+    return df.localCheckpoint(eager=False)
 
 
 def decade_regime(spark: SparkSession) -> bool:
@@ -186,32 +91,9 @@ def decade_regime(spark: SparkSession) -> bool:
     to ≥ 64x the scheduler's parallelism — the measured boundary where
     single-JVM memory classes start appearing (sf100-docs' 4096 at
     local[32]; see SCALING.md §SF100). The one shared definition for
-    every decade-gated lever (barrier placement, pre-explode
-    repartitions, sharded fixpoint aggregation, verify token codes)."""
+    every decade-gated lever (disk barriers, pre-explode repartitions,
+    sharded fixpoint aggregation, the PageRank edge build)."""
     from ..session import pinned_stage_width
 
     width = pinned_stage_width(spark)
     return width >= 64 * spark.sparkContext.defaultParallelism
-
-
-def scale_aware_storage(spark: SparkSession) -> str | None:
-    """Barrier block placement for SHARED DATA-PROPORTIONAL frames:
-    ``None`` (session default — deserialized memory) at fixture/bench
-    scale, ``"disk"`` once the input-byte autosizer has raised the
-    shuffle width into the measured-OOM decade regime (≥ 64x the
-    scheduler parallelism — sf100-docs' 4096 at local[32]).
-
-    Unevictable deserialized localCheckpoint blocks of corpus-sized
-    frames are the measured single-JVM failure class (r11: the
-    pagerank edge barrier at sf10, then the minhash token-set/band
-    barriers at sf100 — both plain heap OOMs at the default 8 g).
-    DISK_ONLY keeps the unified pool free; locally the re-reads ride
-    the OS page cache, on a cluster each executor's local disk. The
-    explicitly-measured smaller regimes keep the fast stock level
-    (r10: CC at sf10 memory 113 s vs disk 124 s).
-    """
-    if spark.conf.get(BARRIER_STORAGE_CONF, None) is not None:
-        return None  # an explicit session choice wins everywhere
-    if decade_regime(spark):
-        return "disk"
-    return None

@@ -7,6 +7,7 @@ ever does (SURVEY §5.2.1).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import decimal
 import math
@@ -26,6 +27,21 @@ SF_SMALL = "/root/testdata/sf0.001"
 def spark():
     spark = get_session("engine-tests")
     yield spark
+
+
+@contextlib.contextmanager
+def knob(spark, conf_key: str, value):
+    """Set a session conf for the duration of a block, then restore
+    (or unset) it, even on error."""
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, str(value))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, prev)
 
 
 @pytest.fixture(scope="session")

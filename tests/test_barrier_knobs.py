@@ -1,11 +1,13 @@
-"""Both settings of the materialization-barrier knobs must be
-result-identical (SCALING.md §CC / §K).
+"""The materialization-barrier paths must be result-identical
+(SCALING.md §CC / §K / §PR).
 
 The shipped defaults are performance choices measured at fixture
 scale (dedup re-evaluates shared frames; PageRank checkpoints its
-loop invariants); the OTHER setting of each knob is the documented
-100 TB deployment path. Without these tests the non-default path has
-no regression guard — the parity suite only ever runs the defaults.
+loop invariants). The other paths are the documented 100 TB
+deployment paths: ``materializeShared`` on, ``barrierMode=durable``,
+and the decade-regime PageRank plan. Without these tests those paths
+have no regression guard — the parity suite only ever runs the
+defaults.
 """
 
 from __future__ import annotations
@@ -13,10 +15,11 @@ from __future__ import annotations
 import pytest
 
 from bigdataprojectspring16_spark import QUERIES
-from bigdataprojectspring16_spark.llmops import dedup, graph
-from bigdataprojectspring16_spark.plans.barriers import knob
+from bigdataprojectspring16_spark.llmops import dedup
+from bigdataprojectspring16_spark.plans import barriers
 
 from .conftest import SF_SMALL as SF_DIR
+from .conftest import knob
 
 
 def _rows(spark, key):
@@ -28,8 +31,6 @@ def _rows(spark, key):
     ["dedup_minhash_lsh", "dedup_threshold_sweep", "dedup_near_jaccard"],
 )
 def test_materialize_shared_both_settings_identical(spark, key):
-    # knob() flips via session conf — the race-free surface; module
-    # globals stay immutable defaults (VERDICT r5 item 7)
     with knob(spark, dedup.MATERIALIZE_SHARED_CONF, False):
         base = _rows(spark, key)
     with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
@@ -37,35 +38,16 @@ def test_materialize_shared_both_settings_identical(spark, key):
     assert base == alt
 
 
-def test_materialize_invariants_both_settings_identical(spark):
-    with knob(spark, graph.MATERIALIZE_INVARIANTS_CONF, True):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.MATERIALIZE_INVARIANTS_CONF, False):
-        alt = _rows(spark, "graph_pagerank_rounds")
-    assert base == alt
-
-
-def test_lazy_checkpoint_both_settings_identical(spark):
-    with knob(spark, graph.LAZY_CHECKPOINT_CONF, True):
-        base = _rows(spark, "graph_connected_components")
-    with knob(spark, graph.LAZY_CHECKPOINT_CONF, False):
-        alt = _rows(spark, "graph_connected_components")
-    assert base == alt
-
-
-# --- r5: barrier MECHANISM modes (plans/barriers.py) ----------------
+# --- barrier MECHANISM modes (plans/barriers.py) --------------------
 #
-# The structural knobs above decide WHERE barriers sit; the barrier
-# mode decides HOW each materializes (local/eager localCheckpoint vs
-# durable checkpoint() — the cluster fault-tolerance path from the
-# r4 verdict). Every mode must be result-identical on keys
+# The barrier mode decides HOW each barrier materializes (local
+# localCheckpoint vs durable checkpoint() — the cluster
+# fault-tolerance path). Every mode must be result-identical on keys
 # that exercise every barrier site: the CC fixpoint loop, the
-# PageRank loop invariants, and (with MATERIALIZE_SHARED forced on)
+# PageRank loop invariants, and (with materializeShared forced on)
 # the dedup shared frames.  (A replicated-persist mode was measured
 # and rejected — persist keeps lineage, and the fixpoint's plan tree
 # grows exponentially with rounds; see plans/barriers.py docstring.)
-
-from bigdataprojectspring16_spark.plans import barriers  # noqa: E402
 
 _BARRIER_KEYS = [
     "graph_connected_components",
@@ -75,7 +57,7 @@ _BARRIER_KEYS = [
 ]
 
 
-@pytest.mark.parametrize("mode", ["eager", "durable"])
+@pytest.mark.parametrize("mode", [m for m in barriers._MODES if m != "local"])
 def test_barrier_modes_result_identical(spark, tmp_path, mode):
     with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
         base = {k: _rows(spark, k) for k in _BARRIER_KEYS}
@@ -87,95 +69,47 @@ def test_barrier_modes_result_identical(spark, tmp_path, mode):
 
 
 def test_barrier_mode_rejects_unknown_value(spark):
-    spark.conf.set(barriers.BARRIER_MODE_CONF, "bogus")
-    try:
+    with knob(spark, barriers.BARRIER_MODE_CONF, "bogus"):
         with pytest.raises(ValueError, match="barrierMode"):
             barriers.barrier_mode(spark)
-    finally:
-        spark.conf.unset(barriers.BARRIER_MODE_CONF)
-
-
-def test_conf_knob_overrides_module_global(spark):
-    # Session conf wins over the module default (ADVICE r4: per-query
-    # overrides must not race on module state).
-    assert barriers.conf_knob(spark, "spark.bigdataprojectspring16.x", True)
-    spark.conf.set("spark.bigdataprojectspring16.x", "false")
-    try:
-        assert not barriers.conf_knob(
-            spark, "spark.bigdataprojectspring16.x", True
-        )
-    finally:
-        spark.conf.unset("spark.bigdataprojectspring16.x")
 
 
 def test_pagerank_edge_build_both_strategies_identical(spark):
-    with knob(spark, graph.PAGERANK_EDGE_BUILD_CONF, "group"):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_EDGE_BUILD_CONF, "selfjoin"):
-        alt = _rows(spark, "graph_pagerank_rounds")
-    assert base == alt
+    """The decade-regime PageRank plan (self-join edge build, sharded
+    pair distinct and inflow sum, DISK_ONLY invariant barriers) must
+    return the rows of the fixture-width plan (group edge build,
+    partial aggregation, stock barriers). Forcing the shuffle width to
+    64x parallelism selects the decade plan on fixture data."""
+    import re
 
-
-@pytest.mark.parametrize(
-    "key", ["graph_connected_components", "graph_cluster_keep_best"]
-)
-def test_cc_star_impl_both_forms_identical(spark, key):
-    # r7: the window star rounds must return the exact rows of the
-    # r3-r6 groupBy+join form (same per-key minima by construction;
-    # this pins it against the real fixture graph).
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "window"):
-        base = _rows(spark, key)
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "groupjoin"):
-        alt = _rows(spark, key)
-    assert base == alt
-
-
-def test_cc_star_impl_rejects_unknown_value(spark):
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "bogus"):
-        with pytest.raises(ValueError, match="ccStarImpl"):
-            QUERIES["graph_connected_components"](spark, SF_DIR)
+    key = "spark.sql.shuffle.partitions"
+    base = _rows(spark, "graph_pagerank_rounds")
+    with knob(spark, key, 64 * spark.sparkContext.defaultParallelism):
+        df = QUERIES["graph_pagerank_rounds"](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        decade = sorted(tuple(r) for r in df.collect())
+    assert decade == base
+    assert len(base) > 0
+    assert len(re.findall(r"REPARTITION_BY_NUM", plan)) > 0, (
+        "forced-decade plan lost its sharding exchanges"
+    )
 
 
 def test_barrier_storage_knob(spark):
-    """barrierStorage=disk routes local barriers to DISK_ONLY blocks;
-    the default is Spark's stock level; junk values raise."""
-    import pytest
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdataprojectspring16_spark.plans import barriers
-
-    assert barriers._local_barrier_level(spark) is None
-    with barriers.knob(spark, barriers.BARRIER_STORAGE_CONF, "disk"):
-        assert (
-            barriers._local_barrier_level(spark) == StorageLevel.DISK_ONLY
-        )
-        # and the barrier itself still materializes + truncates lineage
-        df = barriers.barrier(
-            spark.range(100).selectExpr("id", "id * 2 AS v"), eager=True
-        )
-        assert df.count() == 100
-    with barriers.knob(spark, barriers.BARRIER_STORAGE_CONF, "junk"):
-        with pytest.raises(ValueError):
-            barriers._local_barrier_level(spark)
-
-
-def test_pagerank_sharded_agg_all_modes_identical(spark):
-    # r11: the sharded-aggregation arm (explicit group-key
-    # repartition before every fact-sized aggregate) must return the
-    # exact rows of the default partial-aggregation arm — the knob
-    # changes physical partitioning only, never results.
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "off"):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "on"):
-        sharded = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "auto"):
-        auto = _rows(spark, "graph_pagerank_rounds")
-    assert base == sharded == auto
-
-
-def test_pagerank_sharded_agg_rejects_bad_value(spark):
-    import pytest as _pytest
-
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "sometimes"):
-        with _pytest.raises(ValueError, match="auto | on | off"):
-            _rows(spark, "graph_pagerank_rounds")
+    """barrier(df, disk=True) keeps the rows, cuts the lineage, and
+    stores the blocks DISK_ONLY."""
+    sc = spark.sparkContext
+    src = spark.range(100).selectExpr("id", "id * 2 AS v")
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    df = barriers.barrier(src, disk=True)
+    assert sorted(df.collect()) == sorted(src.collect())
+    logical = df._jdf.queryExecution().logical().toString()
+    assert "LogicalRDD" in logical and "Range" not in logical
+    levels = [
+        rdd.getStorageLevel()
+        for i, rdd in sc._jsc.getPersistentRDDs().items()
+        if i not in before
+    ]
+    assert levels and all(
+        lv.useDisk() and not lv.useMemory() for lv in levels
+    )

@@ -198,3 +198,36 @@ def test_bench_fixture_round_count_pinned(spark):
     rep_nodes, rep_edges, _spokes = _near_dup_edge_parts(d, 0.95)
     _labels, rounds = cc_with_rounds(rep_nodes, rep_edges)
     assert rounds == 4, f"sf0.1 rep graph converged in {rounds} rounds"
+
+
+def test_cc_raises_when_fixpoint_does_not_converge(spark, monkeypatch):
+    """Running out of rounds before the star-forest test passes must
+    raise, never return labels that may be wrong: a 16-node chain is
+    not a star after one round."""
+    import pytest
+
+    from bigdataprojectspring16_spark.llmops import graph
+
+    monkeypatch.setattr(graph, "MAX_ITERATIONS", 1)
+    nodes = spark.range(16).select(F.col("id").alias("node"))
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cc_with_rounds(nodes, e)
+
+
+def test_carry_rejects_internal_column_names(spark):
+    """A carry column named like an internal one would shadow it."""
+    import pytest
+
+    from bigdataprojectspring16_spark.llmops.graph import (
+        components_over_docs,
+    )
+    from bigdataprojectspring16_spark.tables import load_table
+
+    d = load_table(spark, SF_DIR, "documents").withColumn(
+        "component", F.lit(0)
+    )
+    with pytest.raises(ValueError, match="component"):
+        components_over_docs(d, 0.95, carry=("component",))

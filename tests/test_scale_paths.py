@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from bigdataprojectspring16_spark.llmops import dedup, similarity
 from bigdataprojectspring16_spark.tables import load_table
 
+from .conftest import knob
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -407,7 +409,6 @@ def test_verify_token_codes_on_equals_off(spark):
     Jaccard is a set function and |intersect|/|union| survive the
     injective-in-practice 64-bit token coding."""
     from bigdataprojectspring16_spark.llmops import corpus
-    from bigdataprojectspring16_spark.plans.barriers import knob
 
     keys = [
         ("dedup_minhash_lsh", dedup.dedup_minhash_lsh),
@@ -427,19 +428,10 @@ def test_verify_token_codes_on_equals_off(spark):
 
 def test_verify_token_codes_knob_semantics(spark):
     """Default is ON (measured: hash-equal + faster at every scale);
-    ``auto`` resolves by decade regime — OFF at fixture width, ON
-    once the autosized width crosses 64x parallelism."""
-    from bigdataprojectspring16_spark.plans.barriers import knob
-    from bigdataprojectspring16_spark.session import (
-        _SHUFFLE_PARTITIONS_KEY,
-    )
-
+    ``off`` is the string-form reference; anything else raises."""
     assert dedup.verify_token_codes(spark) is True  # shipped default
-    with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "auto"):
+    with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "off"):
         assert dedup.verify_token_codes(spark) is False
-        wide = 64 * spark.sparkContext.defaultParallelism
-        with knob(spark, _SHUFFLE_PARTITIONS_KEY, str(wide)):
-            assert dedup.verify_token_codes(spark) is True
     with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "bogus"):
         with pytest.raises(ValueError, match="verifyTokenCodes"):
             dedup.verify_token_codes(spark)
