@@ -12,6 +12,9 @@ defaults.
 
 from __future__ import annotations
 
+import contextlib
+import re
+
 import pytest
 
 from bigdataprojectspring16_spark import QUERIES
@@ -74,25 +77,52 @@ def test_barrier_mode_rejects_unknown_value(spark):
             barriers.barrier_mode(spark)
 
 
+def _pagerank_rows_and_plan(spark, decade: bool):
+    """Rows and executed plan of graph_pagerank_rounds in the fixture
+    regime or, by forcing the shuffle width to 64x parallelism, in the
+    decade regime (plans/barriers.decade_regime)."""
+    width = 64 * spark.sparkContext.defaultParallelism
+    with contextlib.ExitStack() as stack:
+        if decade:
+            stack.enter_context(
+                knob(spark, "spark.sql.shuffle.partitions", width)
+            )
+        df = QUERIES["graph_pagerank_rounds"](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in df.collect()), plan
+
+
 def test_pagerank_edge_build_both_strategies_identical(spark):
     """The decade-regime PageRank plan (self-join edge build, sharded
     pair distinct and inflow sum, DISK_ONLY invariant barriers) must
     return the rows of the fixture-width plan (group edge build,
     partial aggregation, stock barriers). Forcing the shuffle width to
     64x parallelism selects the decade plan on fixture data."""
-    import re
-
-    key = "spark.sql.shuffle.partitions"
-    base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, key, 64 * spark.sparkContext.defaultParallelism):
-        df = QUERIES["graph_pagerank_rounds"](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        decade = sorted(tuple(r) for r in df.collect())
+    base, _ = _pagerank_rows_and_plan(spark, decade=False)
+    decade, plan = _pagerank_rows_and_plan(spark, decade=True)
     assert decade == base
     assert len(base) > 0
     assert len(re.findall(r"REPARTITION_BY_NUM", plan)) > 0, (
         "forced-decade plan lost its sharding exchanges"
     )
+
+
+def test_pagerank_sharded_agg_all_modes_identical(spark):
+    # The sharded-aggregation arm (an explicit pid-keyed repartition
+    # before each round's inflow sum, decade regime only) must return
+    # the exact rows of the partial-aggregation arm the fixture regime
+    # runs — sharding changes physical partitioning only, never
+    # results. Each plan must also be the arm it claims to be.
+    base, base_plan = _pagerank_rows_and_plan(spark, decade=False)
+    sharded, sharded_plan = _pagerank_rows_and_plan(spark, decade=True)
+    assert base == sharded
+    assert "REPARTITION_BY_NUM" not in base_plan
+    width = 64 * spark.sparkContext.defaultParallelism
+    shards = re.findall(
+        rf"hashpartitioning\(pid#\d+L?, {width}\), REPARTITION_BY_NUM",
+        sharded_plan,
+    )
+    assert len(shards) == 3, sharded_plan  # one per unrolled round
 
 
 def test_barrier_storage_knob(spark):
