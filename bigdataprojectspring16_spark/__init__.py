@@ -27,60 +27,6 @@ from .multimodal import ops as multimodal_ops  # noqa: F401
 from .operators import scans, projection, joins, aggregates, windows, sorts  # noqa: F401
 from .operators import tpch  # noqa: F401
 
-# Registry order == the order the driver's verify walks the keys, and
-# each round's driver run is capped at 50 entries (every
-# CORRECTNESS_r0N.json contains exactly 50). Standing rotation rule
-# (ADVICE r2 discipline): keys whose code changed this round verify
-# FIRST, then any key whose last check failed, then the
-# stalest-signal cohort, oldest newest-check first.
-#
-# Since r13 the window is COMPUTED from the committed
-# CORRECTNESS_r*.json history (VERDICT r12 #8 — the manual list was a
-# once-per-round edit that r11 forgot mid-round; rotation.py derives
-# it mechanically and tests/test_rotation.py pins the result). Only
-# the changed-keys list below remains a per-round edit, because
-# "which plans changed" is the one input the history can't know.
-_CHANGED_KEYS_THIS_ROUND = [
-    # r13: the 8 skew-family keys now route events/customer through
-    # the write-once bucketed layout (tables.load_skew_table, default
-    # ON — VERDICT r12 #1; declared-plan A/B receipt
-    # tools/receipts/bucketed_skew_declared_r13.txt). Hashes are
-    # layout-invariant by contract, so these verify first.
-    "join_skew_events_customers", "sessionize_gap_batch",
-    "stream_session", "events_funnel", "events_transition_matrix",
-    "events_decayed_user_value", "events_inter_arrival_stats",
-    "retention_cohorts",
-    # r13: the candidate-tail repartition moved to doc_a alone (the
-    # sf50 8 g adjudication, VERDICT r12 #3 — see dedup.py
-    # _minhash_candidate_pairs / prefix_filter_candidates), changing
-    # every plan that rides those builders.
-    "dedup_minhash_lsh", "dedup_near_jaccard", "dedup_ngram_jaccard",
-    "dedup_edit_distance", "dedup_threshold_sweep",
-    "graph_connected_components", "graph_cluster_keep_best",
-    "docs_leakage_safe_split", "multimodal_payload_near_dup",
-    "graph_pagerank_rounds",
-]
-
-from .rotation import compute_driver_window  # noqa: E402
-
-_DRIVER_WINDOW_PRIORITY = compute_driver_window(
-    list(QUERIES), _CHANGED_KEYS_THIS_ROUND
-)
-
-
-def _prioritize(priority: list[str]) -> None:
-    missing = [k for k in priority if k not in QUERIES]
-    if missing:
-        raise ValueError(f"unknown priority keys: {missing}")
-    order = priority + [k for k in QUERIES if k not in set(priority)]
-    for d in (QUERIES, ORACLES):
-        snapshot = dict(d)
-        d.clear()
-        d.update({k: snapshot[k] for k in order if k in snapshot})
-
-
-_prioritize(_DRIVER_WINDOW_PRIORITY)
-
 __all__ = [
     "get_session",
     "load_tables",

@@ -7,7 +7,7 @@ scan must stay in bijection with the per-site bound table, and every
 site exercised at fixture scale must produce a frame within its
 declared bound — so an edit that broadcasts a data-proportional frame
 (the sf10 ``text_boilerplate_ngrams`` OOM class) fails CI instead of
-failing a decade run. ``tools/broadcast_bounds_audit.py`` re-runs the
+failing a decade run. ``tools/broadcast_audit.py`` re-runs the
 measured half at the sf1/sf10 decades and writes the receipt.
 """
 
@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from bigdataprojectspring16_spark.plans.broadcast_audit import (
+from broadcast_audit import (
     BOUND_TABLE,
     capture_counts,
     scan_sites,
@@ -90,7 +90,7 @@ def test_scanner_detects_each_forbidden_spelling():
     spelling to the per-file detector and assert it fires (the
     non-literal hint case is the ADVICE r12 gap: ``df.hint(h)`` with
     ``h = 'broadcast'`` used to bypass the literal-string check)."""
-    from bigdataprojectspring16_spark.plans.broadcast_audit import scan_source
+    from broadcast_audit import scan_source
 
     firing = [
         "from pyspark.sql.functions import broadcast",

@@ -19,7 +19,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from .conftest import _norm_cell, assert_matches_oracle
+from comparator import norm
+
+from .conftest import assert_matches_oracle
 
 
 def _query_from(rows):
@@ -70,14 +72,11 @@ def test_hugeint_discipline_property(spark, ddb, xs):
 
 
 def test_norm_cell_tags_types():
-    """Decimal, int, float, bool of equal numeric value all differ."""
+    """Decimal, int, float, bool of equal numeric value all differ, and
+    NULL differs from each (the cell rendering the mirror comparator
+    shares with tools/driver_sim.py)."""
     import decimal
 
-    cells = [
-        _norm_cell(1),
-        _norm_cell(1.0),
-        _norm_cell(decimal.Decimal(1)),
-        _norm_cell(True),
-    ]
+    cells = [norm(1), norm(1.0), norm(decimal.Decimal(1)), norm(True)]
     assert len(set(cells)) == 4
-    assert _norm_cell(None) is None
+    assert norm(None) not in cells

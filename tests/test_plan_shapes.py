@@ -79,15 +79,34 @@ def test_multiway_star_broadcasts_all_dims(spark):
 CONTRACTED_WINDOW_KEYS = {"docs_pack_sequences"}
 
 
+#: Keys whose CartesianProduct was adjudicated constant-bounded (r14,
+#: ADVICE r13 #1). Under the declared-only broadcast rule a cross of
+#: two constant-bounded frames plans as CartesianProduct unless a
+#: broadcast hint marks a side: events_funnel (three 1-row global
+#: totals), events_moving_avg_7d (date spine x distinct event-type
+#: vocabulary), sim_ann_lsh (Range(16) x Range(64) hyperplane grid).
+#: A cartesian on any other key fails, so a data-sized one cannot
+#: slip in unnoticed.
+CARTESIAN_ALLOWLIST = {"events_funnel", "events_moving_avg_7d", "sim_ann_lsh"}
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_unpartitioned_window_in_any_declared_query(spark, name):
     """No declared plan moves the whole input to a single partition
-    via an empty window partition spec (the WindowExec warning)."""
-    if name in CONTRACTED_WINDOW_KEYS:
-        pytest.skip("sanctioned contracted-frame window (see allowlist)")
+    via an empty window partition spec (the WindowExec warning),
+    crosses the Python boundary row at a time (``BatchEvalPython``;
+    the declared UDF keys are Arrow-batched), or plans a
+    CartesianProduct outside the adjudicated allowlist."""
     df = QUERIES[name](spark, SF_DIR)
-    plan = _optimized(df)
-    lowered = plan.lower()
+    physical = _physical(df)
+    assert "BatchEvalPython" not in physical, f"{name}: row-at-a-time Python UDF"
+    if name not in CARTESIAN_ALLOWLIST:
+        assert "CartesianProduct" not in physical, (
+            f"{name}: CartesianProduct outside the constant-bounded allowlist"
+        )
+    if name in CONTRACTED_WINDOW_KEYS:
+        return  # sanctioned contracted-frame window (see allowlist)
+    lowered = _optimized(df).lower()
     # windowspecdefinition(partKey1, ..., orderKey1 ASC, ..., frame):
     # if the FIRST argument already has a sort direction, the
     # partition key list is empty -> all-to-one-partition window.

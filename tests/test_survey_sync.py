@@ -45,15 +45,3 @@ def test_survey_rows_only_list_is_current():
     m = re.search(r"(\d+) are sanctioned rows-only", totals)
     assert m and int(m.group(1)) == len(rows_only)
 
-
-def test_driver_window_priority_is_valid():
-    """The 50-key verify-window priority list must stay exactly 50
-    registered, duplicate-free keys — the driver checks the first 50
-    registry entries per round, so a typo or drift here silently
-    wastes verification slots."""
-    from bigdataprojectspring16_spark import _DRIVER_WINDOW_PRIORITY
-
-    assert len(_DRIVER_WINDOW_PRIORITY) == 50
-    assert len(set(_DRIVER_WINDOW_PRIORITY)) == 50
-    assert set(_DRIVER_WINDOW_PRIORITY) <= set(QUERIES)
-    assert list(QUERIES)[:50] == _DRIVER_WINDOW_PRIORITY

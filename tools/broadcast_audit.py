@@ -18,8 +18,13 @@ data-proportional frame, because
    audit's scale factor.
 
 ``tests/test_broadcast_bounds.py`` pins (1)<->(2) sync and runs (3)
-at fixture scale; ``tools/broadcast_bounds_audit.py`` runs (3) at the
-sf1 decade and writes the receipt.
+at fixture scale; run as a script, this module runs (3) at any decade
+and prints the per-site receipt table::
+
+    python tools/broadcast_audit.py [sf_dir]   # default .bench_sf1
+        > tools/receipts/broadcast_bounds_sf1_r11.txt
+
+with exit status 1 if any site exceeds its declared bound.
 
 Bounds are declared for the sf1 audit scale. Sites whose bound is a
 true scale-invariant constant say so in the reason; sites bounded by
@@ -38,7 +43,8 @@ from dataclasses import dataclass
 
 import pyspark.sql.functions as _pf
 
-PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG_ROOT = os.path.join(REPO, "bigdataprojectspring16_spark")
 
 
 @dataclass(frozen=True)
@@ -132,15 +138,12 @@ def scan_violations() -> list[str]:
     tests/test_broadcast_bounds.py asserts this returns [].
     """
     bad: list[str] = []
-    audit_rel = "plans/broadcast_audit.py"
     for dirpath, _dirs, files in os.walk(PKG_ROOT):
         for fn in sorted(files):
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fn)
             rel = os.path.relpath(path, PKG_ROOT).replace(os.sep, "/")
-            if rel == audit_rel:
-                continue  # the probe machinery itself
             with open(path, encoding="utf-8") as f:
                 bad.extend(scan_source(rel, f.read()))
     return bad
@@ -231,9 +234,7 @@ def capture_counts(
         frame = sys._getframe(1)
         while frame is not None:
             path = os.path.abspath(frame.f_code.co_filename)
-            if path.startswith(PKG_ROOT + os.sep) and not path.endswith(
-                os.path.join("plans", "broadcast_audit.py")
-            ):
+            if path.startswith(PKG_ROOT + os.sep):
                 rel = os.path.relpath(path, PKG_ROOT).replace(os.sep, "/")
                 site = by_line.get((rel, frame.f_lineno))
                 if site is not None:
@@ -449,3 +450,37 @@ BOUND_TABLE: dict[tuple[str, str, int], tuple[int, str]] = {
     ("streaming/batch_windows.py", "stream_watermark_late", 0): (
         1, "1-row max event-time (watermark twin)"),
 }
+
+
+def main() -> int:
+    sys.path.insert(0, REPO)
+    from bigdataprojectspring16_spark import get_session
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".bench_sf1")
+    spark = get_session("broadcast_bounds_audit")
+    counts, failed = capture_counts(spark, sf_dir)
+    print(f"broadcast bounds audit @ {sf_dir}: "
+          f"{len(counts)} sites measured, {len(failed)} construct fails")
+    if failed:
+        print("CONSTRUCT FAILS:", failed)
+    bad = 0
+    for key in sorted(BOUND_TABLE):
+        bound, reason = BOUND_TABLE[key]
+        n = counts.get(key)
+        if n is None:
+            status = "unexercised"
+        elif n <= bound:
+            status = "ok"
+        else:
+            status = "OVER"
+            bad += 1
+        meas = "-" if n is None else str(n)
+        print(f"{meas:>9} <= {bound:<9} {status:<11} "
+              f"{key[0]}:{key[1]}#{key[2]}  [{reason}]")
+    print(f"RESULT: {'FAIL' if bad or failed else 'PASS'} "
+          f"({bad} over-bound, {len(failed)} construct fails)")
+    return 1 if bad or failed else 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

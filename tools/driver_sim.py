@@ -1,82 +1,176 @@
-"""Simulate the driver's t1 smoke + t2 oracle gate through the public
-surface: import __spark_entry__, run entry(), then every queries() key
-at sf0.01 vs oracle_sql() in DuckDB (row-count + schema + order-
-insensitive value-hash).
+"""The repo's one engine-vs-DuckDB verifier: the driver's t1 smoke +
+t2 oracle gate through the public surface, at any scale or sample.
 
-Type-faithful comparison (VERDICT.md r2 item 3): the r2 driver flagged
-5 keys whose *values* matched but whose oracle column came back as
-DuckDB HUGEINT (int128) — a representation the old `%.6g`/`str()`
-normalizer was blind to. The oracle side is now fetched via `.arrow()`
-(HUGEINT -> decimal128, int64 stays int64, NULLs stay NULL) and every
-value is hashed with a TYPE TAG, so an int64 `6` and a decimal128 `6`
-hash differently — exactly the sensitivity the real driver showed.
+It imports ``__spark_entry__``, runs ``entry()``, then each chosen
+``queries()`` key against its ``oracle_sql()`` in DuckDB (row count +
+sorted schema + order-insensitive value hash, ``tools/comparator.py``).
 
-Floats render at DRIVER GRADE (VERDICT.md r5 item 4): `round(v, 9)`
-then `repr`, the same discipline as tests/conftest.py. The old
-tolerant `%.6g` provably masked the r5 driver red — q10's
-307843.60-vs-307843.59 cent flip renders identically at 6 significant
-digits — so a key could receipt green here and fail the real driver.
-A receipt from this tool is only evidence if its comparator is at
-least as strict as the driver's; `tests/test_driver_sim_comparator.py`
-pins the q10 pair as a regression.
+Type-faithful comparison (VERDICT.md r2 item 3): the oracle side is
+fetched via ``.arrow()`` (HUGEINT -> decimal128, int64 stays int64,
+NULLs stay NULL) and every value is hashed with a type tag, so an
+int64 ``6`` and a decimal128 ``6`` hash differently. Floats render at
+driver grade (VERDICT.md r5 item 4): ``round(v, 9)`` then ``repr``;
+the old ``%.6g`` masked q10's 307843.60-vs-307843.59 cent flip.
+``tests/test_driver_sim_comparator.py`` pins that pair.
+
+Usage:
+    python tools/driver_sim.py [--sf-dir DIR] [--sample-mod N]
+                               [--output-sample N] [--oracle-only]
+                               [key | @set ...]
+
+No key arguments runs the full registry. Named key sets:
+
+    @all_pairs    the 13 keys whose oracle is all-pairs or recursive
+                  SQL that DuckDB cannot finish above sf0.01
+    @full_output  the 13 keys whose output grows with the input
+                  (> 500k rows at sf1), each with its sample column
+    @money_tpch   the 43 TPC-H and money-grid keys
+    @decade       every key minus @all_pairs and @full_output
+
+Modes:
+
+- ``--sample-mod N`` runs on a 1-in-N ``hash(doc_id)`` /
+  ``hash(vec_id)`` sample of documents/embeddings (the other tables
+  are symlinked), written to a temporary directory. The sample keeps
+  the source's lengths and value ranges while bounding an all-pairs
+  oracle at (n/N)² pairs.
+- ``--output-sample N`` computes each full result on both engines,
+  then hashes only the rows with ``knuth_hash(col, N) == 0`` on the
+  key's declared sample column (bit-identical on Spark and DuckDB).
+  A timestamp column hashes its epoch seconds.
+- ``--oracle-only`` runs and caches the DuckDB side alone, with no
+  SparkSession (pre-warming the cache for a large scale).
+
+The audits, one command each:
+
+    # sf1 decade: every key with a finishable, collectable oracle
+    python tools/driver_sim.py --sf-dir .bench_sf1 @decade
+    # sf10 money-grid and TPC-H boundary audit
+    python tools/driver_sim.py --sf-dir .bench_sf10 @money_tpch
+    # all-pairs keys on a 1-in-4 input sample of sf0.1
+    python tools/driver_sim.py --sf-dir /root/testdata/sf0.1 --sample-mod 4 @all_pairs
+    # table-sized outputs, 1-in-256 output rows
+    python tools/driver_sim.py --sf-dir .bench_sf1 --output-sample 256 @full_output
+    # pre-warm the oracle cache, one process per heavy key
+    python tools/driver_sim.py --sf-dir /root/testdata/sf0.1 --oracle-only dedup_edit_distance
+
+Environment: ``DUCKDB_MEM`` overrides DuckDB's memory cap (default
+40% of RAM); ``DRIVER_SIM_ORACLE_CACHE=0`` recomputes every oracle;
+``DRIVER_SIM_CACHE_AUDIT=K`` re-runs K cached verdicts live.
 """
+import argparse
+import hashlib
 import os
+import shutil
 import sys
-
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import tempfile
+import time
 
 import duckdb
-import __spark_entry__ as mod
 
 import oracle_store
-from comparator import first_diff, norm, value_hash  # noqa: F401
-from bigdataprojectspring16_spark import get_session
+from comparator import first_diff, value_hash
 
-SF_DIR = os.environ.get("DRIVER_SIM_SF_DIR", "/root/testdata/sf0.01")
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
-spark = get_session("driver-sim")
+#: Keys whose oracle is quadratic or recursive SQL that DuckDB cannot
+#: finish above sf0.01; covered at scale by ``--sample-mod``.
+ALL_PAIRS_KEYS = [
+    "graph_cluster_keep_best",
+    "graph_connected_components",
+    "docs_leakage_safe_split",
+    "docs_fold_contamination",
+    "dedup_minhash_lsh",
+    "dedup_near_jaccard",
+    "dedup_ngram_jaccard",
+    "dedup_edit_distance",
+    "dedup_embedding_cosine",
+    "dedup_threshold_sweep",
+    "sim_pairs_threshold",
+    "multimodal_payload_near_dup",
+    "docs_subset_containment",
+]
 
-# --- t1 smoke ---
-df = mod.entry(spark)
-rows = df.collect()
-print(f"t1 smoke: entry() -> {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
-assert len(rows) > 0
+#: Keys whose output grows with the input (projected > 500k rows at
+#: sf1, from the sf0.01 sizes x 100) -> the stable output column their
+#: ``--output-sample`` subset hashes on. A column need not be unique
+#: per row (``sessionize_gap_batch`` keeps every session of 1/N
+#: users); it must be stable, present in both outputs, and keep about
+#: 1/N of the rows.
+FULL_OUTPUT = {
+    "scan_parquet": "l_orderkey",
+    "scan_with_pushdown": "l_orderkey",
+    "project_compute": "l_orderkey",
+    "join_left_outer": "o_orderkey",
+    "join_right_outer": "o_orderkey",
+    "window_running_total": "o_orderkey",
+    "window_lag_lead": "event_id",
+    "window_range_frame": "event_id",
+    "window_first_last": "event_id",
+    "sessionize_gap_batch": "user_id",
+    "stream_session": "user_id",
+    "stream_sliding": "window_start",
+    "multimodal_features": "doc_id",
+}
 
-# --- t2 oracle gate ---
-con = duckdb.connect()
-# An IN-MEMORY DuckDB has no temp_directory, so out-of-core operators
-# cannot spill — a decade-scale oracle (e.g. simhash's 200M-row
-# nibble stream at sf10) dies with a bad-allocation OOM instead of
-# offloading. Give it a spill dir and a bounded share of RAM so the
-# oracle side degrades to disk, never to a crash (and never starves
-# the concurrently-running Spark JVM).
-con.execute("SET temp_directory='/tmp/duckdb_spill'")
-# Default cap: 40% of physical RAM (ADVICE r10 — a hardcoded 48GB
-# exceeds memory on smaller hosts, breaking the never-starve-Spark
-# guarantee); DUCKDB_MEM stays the explicit override.
-_default_mem = f"{max(1, os.sysconf('SC_PHYS_PAGES') * os.sysconf('SC_PAGE_SIZE') * 2 // 5 // (1 << 30))}GB"
-con.execute(f"SET memory_limit='{os.environ.get('DUCKDB_MEM', _default_mem)}'")
-for t in TABLES:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+#: Every TPC-H shape plus each key whose output carries a money-grid
+#: sum or average over an unboundedly growing group (functions/money.py
+#: call sites, SCALING.md §MONEY). Float money sums are
+#: magnitude-bounded, so each new decade has caught bugs that were
+#: green at every smaller one.
+MONEY_TPCH_KEYS = [
+    "tpch_q2_min_cost_supplier",
+    "tpch_q3_topk",
+    "tpch_q4_late_order_priority",
+    "tpch_q5_local_supplier_volume",
+    "tpch_q6_revenue_delta",
+    "tpch_q7_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q9_product_profit",
+    "tpch_q10_returned_items",
+    "tpch_q11_important_stock",
+    "tpch_q12_ship_delay_priority",
+    "tpch_q14_promo_share",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_cnt",
+    "tpch_q17_small_qty_revenue",
+    "tpch_q18_large_orders",
+    "tpch_q19_disjunctive_revenue",
+    "tpch_q20_lead_promo_suppliers",
+    "tpch_q21_sole_late_supplier",
+    "tpch_q22_idle_customers",
+    "agg_pricing_summary",
+    "agg_global",
+    "agg_having",
+    "agg_rollup",
+    "agg_cube",
+    "agg_grouping_sets",
+    "agg_conditional",
+    "agg_weighted_percentile",
+    "agg_salted_topk",
+    "agg_multi_distinct",
+    "agg_percentiles",
+    "window_share_of_total",
+    "window_rank_topn",
+    "orders_yoy_growth",
+    "orders_abc_by_segment",
+    "orders_rfm_segments",
+    "orders_open_backlog_by_month",
+    "custdist_two_level_agg",
+    "supplier_return_rate_topk",
+    "merge_upsert_batch",
+    "rollup_incremental_merge",
+    "join_skew_events_customers",
+    "join_multiway_star",
+]
 
-queries = mod.queries()
-oracles = mod.oracle_sql()
-
-
-only = set(sys.argv[1:])
-#: Keys whose DUCKDB oracle is pathologically slow at sf0.1+. The r12
-#: prewarm measured them all (tools/oracle_cache *.json carry
-#: oracle_secs): docs_leakage_safe_split 6891s (all-pairs jaccard
-#: edges + recursive reachability CTE — invisible to the r11 sweeps,
-#: which died before reaching it alphabetically),
-#: dedup_edit_distance 3119s, dedup_ngram_jaccard 3118s,
-#: dedup_threshold_sweep 606s, dedup_near_jaccard 208s,
-#: docs_subset_containment 176s, dedup_minhash_lsh 148s. With
-#: DRIVER_SIM_HEAVY_LAST=1 they sort to the END so a time-boxed
-#: closing sweep covers the most keys before any cutoff; with the
-#: oracle cache (default ON) they cost nothing after the first run.
+#: Keys whose DuckDB oracle takes minutes to hours at sf0.1 (the
+#: tools/oracle_cache entries carry ``oracle_secs``:
+#: docs_leakage_safe_split 6891 s, graph_cluster_keep_best 5535 s,
+#: graph_connected_components 5390 s, dedup_edit_distance 3119 s, ...).
+#: The cache audit skips them: one live run costs too much, and the
+#: drift it looks for shows on the cheap keys equally.
 HEAVY_ORACLE_KEYS = {
     "dedup_edit_distance",
     "dedup_embedding_cosine",
@@ -87,143 +181,308 @@ HEAVY_ORACLE_KEYS = {
     "dedup_minhash_lsh",
     "docs_leakage_safe_split",
     "docs_subset_containment",
-    # The two recursive-reachability graph oracles run ~90 min each
-    # at sf0.1 (r12 prewarm: cluster_keep_best 5535s, cc 5390s;
-    # pagerank_rounds' unrolled-rounds oracle is NOT heavy — 2.0s —
-    # and every other oracle-keyed key warms in seconds).
     "graph_cluster_keep_best",
     "graph_connected_components",
 }
-_heavy_last = os.environ.get("DRIVER_SIM_HEAVY_LAST") == "1"
-def _order(name):
-    return (name in HEAVY_ORACLE_KEYS, name) if _heavy_last else name
-
-# Oracle-result cache (VERDICT r11 next-round #2): replay the DuckDB
-# verdict triple when (SQL, parquet fingerprint, comparator) are all
-# unchanged. Default ON — every HIT is labelled in the per-key line
-# and counted in the footer, so a receipt is transparent about how
-# much of its oracle side was recomputed. DRIVER_SIM_ORACLE_CACHE=0
-# disables for a fully-recomputed (judge-grade) sweep.
-_cache_on = os.environ.get("DRIVER_SIM_ORACLE_CACHE", "1") != "0"
-_comp_ver = oracle_store.comparator_version()
-_data_fp = oracle_store.data_fingerprint(SF_DIR)
-cache_hits = 0
 
 
-def _run_oracle(name):
-    """(nrows, cols, value_hash, rows-or-None, hit) for the oracle side.
-
-    .arrow() is the type-faithful path: DuckDB HUGEINT becomes
-    decimal128(38,0) (Python Decimal), int64 stays int, NULLs in int
-    columns stay None (a pandas .df() would coerce the whole column
-    to float64).
-    """
-    import time as _time
-
-    path = oracle_store.cache_path(name, oracles[name], _comp_ver, _data_fp)
-    if _cache_on:
-        cached = oracle_store.load(path)
-        if cached is not None:
-            return (cached["nrows"], cached["cols"], cached["value_hash"],
-                    None, True)
-    t0 = _time.time()
-    otab = con.execute(oracles[name]).arrow()
-    ocols = otab.column_names
-    opy = otab.to_pylist()
-    orows = [tuple(d[c] for c in ocols) for d in opy]
-    ohash = value_hash(orows, ocols)
-    if _cache_on:
-        oracle_store.store(path, name, SF_DIR, len(orows), ocols, ohash,
-                           _time.time() - t0)
-    return len(orows), ocols, ohash, orows, False
+def named_sets(registry) -> dict[str, list[str]]:
+    """The ``@set`` names the CLI accepts, over the given registry."""
+    decade = set(registry) - set(ALL_PAIRS_KEYS) - set(FULL_OUTPUT)
+    return {
+        "@all_pairs": list(ALL_PAIRS_KEYS),
+        "@full_output": sorted(FULL_OUTPUT),
+        "@money_tpch": list(MONEY_TPCH_KEYS),
+        "@decade": sorted(decade),
+    }
 
 
-fails, rows_only = [], []
-cache_hit_keys: list[str] = []
-for name in sorted(only or queries, key=_order):
-    sdf = queries[name](spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
-    scols = [f.name for f in sdf.schema.fields]
-    if name not in oracles:
-        rows_only.append((name, len(srows)))
-        status = f"rows-only ({len(srows)} rows)"
-        ok = len(srows) >= 0
-    else:
-        n_orows, ocols, ohash, orows, hit = _run_oracle(name)
-        cache_hits += hit
-        if hit:
-            cache_hit_keys.append(name)
-        ok = (
-            len(srows) == n_orows
-            and sorted(scols) == sorted(ocols)
-            and value_hash(srows, scols) == ohash
-        )
-        if ok:
-            status = "MATCH" + (" [oracle-cache]" if hit else "")
-        elif len(srows) != n_orows or sorted(scols) != sorted(ocols):
-            status = f"MISMATCH rows {len(srows)}vs{n_orows} cols {sorted(scols)}vs{sorted(ocols)}"
+def resolve_keys(args: list[str], registry) -> list[str]:
+    """Key names and ``@set`` names -> the sorted keys to run."""
+    sets = named_sets(registry)
+    keys: set[str] = set()
+    for arg in args:
+        if arg in sets:
+            keys.update(sets[arg])
+        elif arg in registry:
+            keys.add(arg)
         else:
-            # The red path always diffs against freshly-executed rows:
-            # a cached verdict never decides a failure's diagnostics.
-            if orows is None:
-                otab = con.execute(oracles[name]).arrow()
-                ocols = otab.column_names
-                orows = [tuple(d[c] for c in ocols)
-                         for d in otab.to_pylist()]
-            status = "HASH MISMATCH " + first_diff(srows, scols, orows, ocols)
-    print(f"{'OK ' if ok else 'FAIL'} {name}: {status}")
-    if not ok:
-        fails.append(name)
+            raise SystemExit(f"unknown key or key set: {arg} "
+                             f"(sets: {' '.join(sets)})")
+    return sorted(keys)
 
-# Subset runs must say so: "N queries, 0 fails" after a 3-key run
-# used to print the FULL registry count (the verify-skill caveat) —
-# a receipt could read as a full pass when it wasn't.
-ran = len(only or queries)
-scope = "" if not only else f" (subset of {len(queries)}-key registry)"
-cache_note = f", {cache_hits} oracle-cache hits" if _cache_on else ", oracle cache OFF"
-print(f"\n{ran} queries{scope}, {len(fails)} fails, {len(rows_only)} rows-only{cache_note}")
 
-# Mechanical cache audit (VERDICT r12 #6): DRIVER_SIM_CACHE_AUDIT=K
-# re-executes K of this run's cached verdicts live and fails on any
-# divergence — the r12 judge did this by hand (20-key cache-off
-# sample); with the env set, every receipt carries it. Sampling is
-# DETERMINISTIC per (comparator, fixture) state so a receipt is
-# reproducible, and skips HEAVY_ORACLE_KEYS (their single run is
-# minutes-to-hours; the audit exists to catch fixture/key-pervasive
-# drift, which the cheap keys expose equally).
-_audit_k = int(os.environ.get("DRIVER_SIM_CACHE_AUDIT", "0") or "0")
-if _audit_k > 0 and cache_hit_keys:
-    import hashlib
+def _duckdb() -> duckdb.DuckDBPyConnection:
+    """An in-memory DuckDB that spills instead of crashing.
 
-    auditable = [k for k in cache_hit_keys if k not in HEAVY_ORACLE_KEYS]
+    With no temp_directory an out-of-core operator cannot spill, so a
+    decade-scale oracle (simhash's 200M-row nibble stream at sf10)
+    dies with a bad-allocation OOM. The cap defaults to 40% of
+    physical RAM so the oracle never starves the Spark JVM running
+    beside it (ADVICE r10: a fixed 48GB exceeded smaller hosts).
+    """
+    con = duckdb.connect()
+    con.execute("SET temp_directory='/tmp/duckdb_spill'")
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    default_mem = f"{max(1, ram * 2 // 5 // (1 << 30))}GB"
+    con.execute(f"SET memory_limit='{os.environ.get('DUCKDB_MEM', default_mem)}'")
+    return con
 
-    def _audit_rank(name):
-        return hashlib.sha256(
-            f"{_comp_ver}|{_data_fp}|{name}".encode()
-        ).hexdigest()
 
-    sample = sorted(auditable, key=_audit_rank)[:_audit_k]
-    diverged = []
-    for name in sample:
-        path = oracle_store.cache_path(
-            name, oracles[name], _comp_ver, _data_fp
+def _build_sample(con, src: str, mod: int, dst: str) -> None:
+    """Write a 1-in-``mod`` hash sample of documents/embeddings to
+    ``dst`` and symlink every other table from ``src``."""
+    src = os.path.abspath(src)
+    for table, key in (("documents", "doc_id"), ("embeddings", "vec_id")):
+        con.execute(
+            f"COPY (SELECT * FROM '{src}/{table}.parquet' "
+            f"WHERE hash({key}) % {mod} = 0 ORDER BY {key}) "
+            f"TO '{dst}/{table}.parquet' (FORMAT parquet)"
         )
-        cached = oracle_store.load(path)
-        otab = con.execute(oracles[name]).arrow()
-        ocols = otab.column_names
-        orows = [tuple(d[c] for c in ocols) for d in otab.to_pylist()]
-        live = {"nrows": len(orows), "cols": list(ocols),
-                "value_hash": value_hash(orows, ocols)}
-        ok = cached == live
-        print(f"cache-audit {'OK  ' if ok else 'DIVERGED'} {name}"
-              + ("" if ok else f": cached={cached} live={live}"))
+    for t in oracle_store.TABLES:
+        if t not in ("documents", "embeddings"):
+            os.symlink(f"{src}/{t}.parquet", f"{dst}/{t}.parquet")
+    n_docs, n_vecs = (
+        con.sql(f"SELECT count(*) FROM '{dst}/{t}.parquet'").fetchone()[0]
+        for t in ("documents", "embeddings")
+    )
+    print(f"sample: {n_docs} docs / {n_vecs} vecs "
+          f"(1-in-{mod} hash-mod of {src})", flush=True)
+
+
+def _sampled_sql(con, sql: str, col: str, mod: int) -> str:
+    """The oracle restricted to the ``--output-sample`` subset."""
+    from bigdataprojectspring16_spark.functions.hashing import knuth_hash_sql
+
+    typ = con.execute(f"DESCRIBE SELECT {col} FROM ({sql})").fetchone()[1]
+    key = f"CAST(epoch({col}) AS BIGINT)" if typ.startswith("TIMESTAMP") else col
+    return f"SELECT * FROM ({sql}) WHERE ({knuth_hash_sql(key, mod)}) = 0"
+
+
+def _sampled_df(sdf, col: str, mod: int):
+    """The Spark result restricted to the ``--output-sample`` subset;
+    a timestamp casts to epoch seconds like DuckDB's ``epoch()``
+    (both sessions run in UTC)."""
+    from pyspark.sql import functions as F
+
+    from bigdataprojectspring16_spark.functions.hashing import knuth_hash
+
+    key = F.col(col)
+    if dict(sdf.dtypes)[col] == "timestamp":
+        key = key.cast("long")
+    return sdf.where(knuth_hash(key, mod) == 0)
+
+
+def _fetch(con, sql: str):
+    """(rows, cols) via ``.arrow()``, the type-faithful path: HUGEINT
+    becomes decimal128 (Python Decimal), int64 stays int, NULLs in int
+    columns stay None (a pandas ``.df()`` would make them float64)."""
+    otab = con.execute(sql).arrow()
+    ocols = otab.column_names
+    return [tuple(d[c] for c in ocols) for d in otab.to_pylist()], ocols
+
+
+class Oracles:
+    """The DuckDB side: each verdict triple (rows, cols, value hash)
+    replayed from ``tools/oracle_cache`` when the SQL, the parquet
+    fingerprint and the comparator are unchanged (VERDICT r11 #2).
+    Every hit is labelled in the per-key line and counted in the
+    footer; ``DRIVER_SIM_ORACLE_CACHE=0`` recomputes everything."""
+
+    def __init__(self, con, sf_dir: str):
+        self.con = con
+        self.sf_dir = sf_dir
+        self.cache_on = os.environ.get("DRIVER_SIM_ORACLE_CACHE", "1") != "0"
+        self.comp_ver = oracle_store.comparator_version()
+        self.data_fp = oracle_store.data_fingerprint(sf_dir)
+
+    def path(self, name: str, sql: str) -> str:
+        return oracle_store.cache_path(name, sql, self.comp_ver, self.data_fp)
+
+    def run(self, name: str, sql: str):
+        """(nrows, cols, value_hash, rows-or-None, cache hit)."""
+        path = self.path(name, sql)
+        if self.cache_on:
+            cached = oracle_store.load(path)
+            if cached is not None:
+                return (cached["nrows"], cached["cols"], cached["value_hash"],
+                        None, True)
+        t0 = time.time()
+        orows, ocols = _fetch(self.con, sql)
+        ohash = value_hash(orows, ocols)
+        if self.cache_on:
+            oracle_store.store(path, name, self.sf_dir, len(orows), ocols,
+                               ohash, time.time() - t0)
+        return len(orows), ocols, ohash, orows, False
+
+    def audit(self, sqls: dict[str, str], hit_keys: list[str], k: int) -> int:
+        """Re-execute ``k`` of this run's cached verdicts live
+        (VERDICT r12 #6); 2 on any divergence. The sample is
+        deterministic per (comparator, fixture) so a receipt is
+        reproducible, and skips HEAVY_ORACLE_KEYS."""
+        auditable = [n for n in hit_keys if n not in HEAVY_ORACLE_KEYS]
+
+        def rank(name):
+            return hashlib.sha256(
+                f"{self.comp_ver}|{self.data_fp}|{name}".encode()
+            ).hexdigest()
+
+        sample = sorted(auditable, key=rank)[:k]
+        diverged = []
+        for name in sample:
+            cached = oracle_store.load(self.path(name, sqls[name]))
+            orows, ocols = _fetch(self.con, sqls[name])
+            live = {"nrows": len(orows), "cols": list(ocols),
+                    "value_hash": value_hash(orows, ocols)}
+            ok = cached == live
+            print(f"cache-audit {'OK  ' if ok else 'DIVERGED'} {name}"
+                  + ("" if ok else f": cached={cached} live={live}"))
+            if not ok:
+                diverged.append(name)
+        print(f"cache-audit: {len(sample) - len(diverged)}/{len(sample)} "
+              f"verdicts reproduced live ({len(auditable)} auditable hits, "
+              f"heavy keys excluded)")
+        if diverged:
+            print(f"cache-audit FAILED: {diverged}")
+            return 2
+        return 0
+
+
+def _parser() -> argparse.ArgumentParser:
+    p = argparse.ArgumentParser(
+        description="Verify registry keys against their DuckDB oracles."
+    )
+    p.add_argument("keys", nargs="*",
+                   help="key names or @all_pairs/@full_output/@money_tpch/"
+                        "@decade (default: the whole registry)")
+    p.add_argument("--sf-dir", default=DEFAULT_SF_DIR,
+                   help="fixture directory (default: %(default)s)")
+    p.add_argument("--sample-mod", type=int, metavar="N",
+                   help="run on a 1-in-N sample of documents/embeddings")
+    p.add_argument("--output-sample", type=int, metavar="N",
+                   help="hash only the 1-in-N knuth_hash output subset")
+    p.add_argument("--oracle-only", action="store_true",
+                   help="run and cache the DuckDB side only, no Spark")
+    return p
+
+
+def main(argv=None) -> int:
+    args = _parser().parse_args(argv)
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry_mod
+
+    queries = entry_mod.queries()
+    keys = resolve_keys(args.keys, queries) or sorted(queries)
+    if args.output_sample:
+        undeclared = [k for k in keys if k not in FULL_OUTPUT]
+        if undeclared:
+            raise SystemExit(f"--output-sample: no sample column declared "
+                             f"for {undeclared}")
+    con = _duckdb()
+    sample_dir = tempfile.mkdtemp(prefix="driver_sim_sample_") if args.sample_mod else None
+    try:
+        if sample_dir:
+            _build_sample(con, args.sf_dir, args.sample_mod, sample_dir)
+        return _verify(args, con, sample_dir or args.sf_dir, keys, queries, entry_mod)
+    finally:
+        if sample_dir:
+            shutil.rmtree(sample_dir)
+
+
+def _verify(args, con, sf_dir, keys, queries, entry_mod) -> int:
+    for t in oracle_store.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    oracles = entry_mod.oracle_sql()
+    store = Oracles(con, sf_dir)
+    mod_n = args.output_sample
+    sqls = {
+        n: _sampled_sql(con, oracles[n], FULL_OUTPUT[n], mod_n) if mod_n
+        else oracles[n]
+        for n in keys if n in oracles
+    }
+    if args.oracle_only:
+        return _prewarm(store, sqls, sf_dir)
+
+    from bigdataprojectspring16_spark import get_session
+
+    spark = get_session("driver-sim")
+    # --- t1 smoke ---
+    df = entry_mod.entry(spark)
+    rows = df.collect()
+    print(f"t1 smoke: entry() -> {len(rows)} rows, "
+          f"schema={[f.name for f in df.schema.fields]}")
+    if not rows:
+        raise SystemExit("t1 smoke: entry() returned no rows")
+
+    # --- t2 oracle gate ---
+    fails, rows_only, hit_keys = [], [], []
+    for name in keys:
+        sdf = queries[name](spark, sf_dir)
+        if mod_n:
+            sdf = _sampled_df(sdf, FULL_OUTPUT[name], mod_n)
+        srows = [tuple(r) for r in sdf.collect()]
+        scols = [f.name for f in sdf.schema.fields]
+        ok = True
+        if name not in sqls:
+            rows_only.append(name)
+            status = f"rows-only ({len(srows)} rows)"
+        else:
+            n_orows, ocols, ohash, orows, hit = store.run(name, sqls[name])
+            if hit:
+                hit_keys.append(name)
+            same_shape = (len(srows) == n_orows
+                          and sorted(scols) == sorted(ocols))
+            ok = same_shape and value_hash(srows, scols) == ohash
+            if ok:
+                status = (f"MATCH ({len(srows)} rows)"
+                          + (" [oracle-cache]" if hit else ""))
+            elif not same_shape:
+                status = (f"MISMATCH rows {len(srows)}vs{n_orows} "
+                          f"cols {sorted(scols)}vs{sorted(ocols)}")
+            else:
+                # A cached verdict never decides a failure's
+                # diagnostics: diff against freshly executed rows.
+                if orows is None:
+                    orows, ocols = _fetch(con, sqls[name])
+                status = "HASH MISMATCH " + first_diff(srows, scols, orows, ocols)
+        print(f"{'OK ' if ok else 'FAIL'} {name}: {status}", flush=True)
+        if mod_n and not srows:
+            print(f"WARN {name}: empty sample — raise density", flush=True)
         if not ok:
-            diverged.append(name)
-    print(f"cache-audit: {len(sample) - len(diverged)}/{len(sample)} "
-          f"verdicts reproduced live ({len(auditable)} auditable hits, "
-          f"heavy keys excluded)")
-    if diverged:
-        print(f"cache-audit FAILED: {diverged}")
-        sys.exit(2)
-if fails:
-    sys.exit(1)
+            fails.append(name)
+
+    # A subset run says so, so its receipt cannot read as a full pass.
+    scope = "" if not args.keys else f" (subset of {len(queries)}-key registry)"
+    cache_note = (f", {len(hit_keys)} oracle-cache hits" if store.cache_on
+                  else ", oracle cache OFF")
+    print(f"\n{len(keys)} queries{scope}, {len(fails)} fails, "
+          f"{len(rows_only)} rows-only{cache_note}")
+
+    audit_k = int(os.environ.get("DRIVER_SIM_CACHE_AUDIT", "0") or "0")
+    if audit_k > 0 and hit_keys and store.audit(sqls, hit_keys, audit_k):
+        return 2
+    return 1 if fails else 0
+
+
+def _prewarm(store: Oracles, sqls: dict[str, str], sf_dir: str) -> int:
+    """``--oracle-only``: compute and cache each oracle; already-cached
+    keys are skipped, so a relaunch is safe. Farm heavy keys out one
+    process per key to run them concurrently."""
+    done = skipped = 0
+    for name, sql in sqls.items():
+        t0 = time.time()
+        nrows, *_rest, hit = store.run(name, sql)
+        if hit:
+            skipped += 1
+            print(f"skip {name}: cached", flush=True)
+        else:
+            done += 1
+            print(f"warm {name}: {nrows} rows in {time.time() - t0:.1f}s",
+                  flush=True)
+    print(f"\nprewarm: {done} computed, {skipped} already cached, "
+          f"sf_dir={sf_dir}", flush=True)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -26,8 +26,7 @@ rotations of a 64-dim vector). An existing documents.parquet from
 make_sf10_docs.py is left in place unless FORCE=1.
 
 Run:  python tools/make_sf10.py     (writes .bench_sf10/<table>.parquet)
-Then: DRIVER_SIM_SF_DIR=/root/repo/.bench_sf10 \
-          python tools/driver_sim.py <money + tpch keys>
+Then: python tools/driver_sim.py --sf-dir .bench_sf10 @money_tpch
 """
 import os
 

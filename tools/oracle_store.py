@@ -70,9 +70,9 @@ def data_fingerprint(sf_dir: str) -> str:
     (size, mtime_ns)-only form replayed stale verdicts for a
     timestamp-preserving regeneration, the exact failure mode the
     bucketed-layout stamps were hardened against in r11. Changing the
-    fingerprint re-keys every existing entry; tools/
-    migrate_oracle_cache.py re-keyed the r12 cache once under the
-    old scheme's own trust (receipt oracle_cache_migration_r13.txt),
+    fingerprint re-keys every existing entry; a one-shot migration
+    re-keyed the r12 cache once under the old scheme's own trust
+    (receipt oracle_cache_migration_r13.txt; the script is retired),
     and the mechanical cache audit (DRIVER_SIM_CACHE_AUDIT) re-runs
     sampled verdicts live per sweep from then on.
     """
