@@ -11,13 +11,17 @@ asserted by tests/test_plan_shapes.py. At 100 TB these two properties
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import money
 from ..functions.hashing import knuth_hash, knuth_hash_sql
 from ..registry import query
-from ..tables import load_table
+from ..sources.sinks import publish_once
+from ..tables import load_table, table_path
 
 
 @query(
@@ -453,74 +457,28 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _publish_partitioned_layout(
-    spark: SparkSession,
-    sf_dir: str,
-    source_table: str,
-    layout: str,
-    write_fn,
+def _derived_layout(
+    spark: SparkSession, sf_dir: str, source_table: str, layout: str, write
 ) -> str:
-    """Write (once per source fixture) a hive-partitioned scratch
-    layout and return its path; ``write_fn(df, staging_path)`` does
-    the actual partitioned write.
+    """Path of the write-once layout ``write(df, loc)`` derives from
+    ``source_table`` of ``sf_dir``, published by
+    ``sources.sinks.publish_once``.
 
-    The scratch layout lives inside the repo (gitignored) so the
-    declared queries never write outside the sandbox.
-
-    ADVICE r8: the layout is written AT MOST ONCE per source and
-    reused afterwards (Spark's own ``_SUCCESS`` marker is the
-    completion check) — an overwrite-every-call form could race two
-    concurrent processes (bench sweep + driver sim) with one deleting
-    files the other was listing. A half-written layout from a crashed
-    run lacks ``_SUCCESS`` and is rewritten into a fresh temp
-    directory, then atomically renamed into place.
-
-    ADVICE r9: the path is keyed by a hash of the ABSOLUTE source dir
-    (two distinct sf_dirs sharing a basename must not collide), and
-    the layout is invalidated when the source parquet is newer than
-    the published ``_SUCCESS`` (a regenerated fixture — e.g.
-    make_sf10.py FORCE=1 — must not keep serving stale data).
+    The layout lives inside the repo (gitignored) so the declared
+    queries never write outside it, at
+    ``.tmp_partitioned/<layout>_<sf basename>_<sha1(abs dir)[:12]>``:
+    two sf dirs sharing a basename never share a layout (ADVICE r9).
     """
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
     abs_dir = os.path.abspath(sf_dir)
     tag = hashlib.sha1(abs_dir.encode()).hexdigest()[:12]
     name = (os.path.basename(os.path.normpath(sf_dir)) or "default") + "_" + tag
-    base = os.path.join(root, ".tmp_partitioned")
-    path = os.path.join(base, f"{layout}_{name}")
-    success = os.path.join(path, "_SUCCESS")
-    if os.path.exists(success):
-        try:
-            src_mtime = os.path.getmtime(
-                os.path.join(abs_dir, f"{source_table}.parquet")
-            )
-            fresh = os.path.getmtime(success) >= src_mtime
-        except OSError:
-            fresh = True  # source vanished — keep serving the layout
-        if fresh:
-            return path
-        shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f"{layout}_{name}_", dir=base)
-    staging = os.path.join(tmp, "data")
-    write_fn(load_table(spark, sf_dir, source_table), staging)
-    try:
-        os.rename(staging, path)  # atomic publish; loser keeps its tmp
-    except OSError:
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            # stale half-written layout from a crashed run: replace it
-            shutil.rmtree(path, ignore_errors=True)
-            try:
-                os.rename(staging, path)
-            except OSError:
-                pass  # concurrent publisher won the retry — use theirs
-        # else: another process published a complete layout — use theirs
-    shutil.rmtree(tmp, ignore_errors=True)
-    return path
+    loc = os.path.join(root, ".tmp_partitioned", f"{layout}_{name}")
+    return publish_once(
+        table_path(sf_dir, source_table),
+        loc,
+        lambda out: write(load_table(spark, sf_dir, source_table), out),
+    )
 
 
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
@@ -532,17 +490,15 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     files here, and thousands per partition on a real cluster).
     """
 
-    def write(ev, staging):
+    def write(ev, loc):
         (
             ev.repartition("event_type")
             .write.mode("overwrite")
             .partitionBy("event_type")
-            .parquet(staging)
+            .parquet(loc)
         )
 
-    return _publish_partitioned_layout(
-        spark, sf_dir, "events", "events_by_type", write
-    )
+    return _derived_layout(spark, sf_dir, "events", "events_by_type", write)
 
 
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
@@ -556,7 +512,7 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     per write task.
     """
 
-    def write(o, staging):
+    def write(o, loc):
         om = o.withColumn(
             "order_month", F.date_format("o_orderdate", "yyyy-MM")
         )
@@ -564,12 +520,10 @@ def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
             om.repartition("order_month")
             .write.mode("overwrite")
             .partitionBy("order_month")
-            .parquet(staging)
+            .parquet(loc)
         )
 
-    return _publish_partitioned_layout(
-        spark, sf_dir, "orders", "orders_by_month", write
-    )
+    return _derived_layout(spark, sf_dir, "orders", "orders_by_month", write)
 
 
 @query(
@@ -719,19 +673,17 @@ def evolved_orders_path(spark: SparkSession, sf_dir: str) -> str:
     Batch 0 ("legacy writer", the deterministic 1/3 of orders with
     ``knuth_hash(o_orderkey, 3) = 0``) is written WITHOUT
     ``o_orderpriority``; batch 1 carries the full schema and is
-    appended to the same directory. Published write-once with the
-    standard ``_SUCCESS``/mtime discipline."""
+    appended to the same directory. Published write-once like every
+    derived layout (``sources.sinks.publish_once``)."""
 
-    def write(o, staging):
+    def write(o, loc):
         legacy = knuth_hash(F.col("o_orderkey"), 3) == 0
         o.where(legacy).drop("o_orderpriority").write.mode(
             "overwrite"
-        ).parquet(staging)
-        o.where(~legacy).write.mode("append").parquet(staging)
+        ).parquet(loc)
+        o.where(~legacy).write.mode("append").parquet(loc)
 
-    return _publish_partitioned_layout(
-        spark, sf_dir, "orders", "orders_evolved", write
-    )
+    return _derived_layout(spark, sf_dir, "orders", "orders_evolved", write)
 
 
 @query(

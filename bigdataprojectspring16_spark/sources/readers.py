@@ -44,24 +44,33 @@ _PARQUET_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
-def _path_stamp(path: str) -> tuple[int, int] | None:
-    """(summed ``st_size``, newest ``mtime_ns``) over a parquet file or
-    every entry of a directory layout; rewriting it changes the stamp.
-    None when the local filesystem cannot stat it."""
+def source_stamp(path: str) -> tuple[int, int] | None:
+    """(summed file bytes, newest ``mtime_ns``) of a parquet file or of
+    every entry of a directory layout; None when the local filesystem
+    cannot stat it.
+
+    The package's one test of whether an input changed: ``read_parquet``
+    reuses a schema, ``tables.load_table`` sizes the shuffle, and
+    ``sources.sinks.publish_once`` keeps a derived layout only while
+    the stamp holds. Rewriting a file changes it, also when the rewrite
+    (``cp -p``) keeps the old mtime but not the old size.
+    """
     try:
         st = os.stat(path)
     except OSError:
         return None
-    size, newest = st.st_size, st.st_mtime_ns
-    if stat.S_ISDIR(st.st_mode):
-        for root, dirs, files in os.walk(path):
-            for name in dirs + files:
-                try:
-                    sub = os.stat(os.path.join(root, name))
-                except OSError:
-                    continue
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_size, st.st_mtime_ns
+    size, newest = 0, st.st_mtime_ns
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            try:
+                sub = os.stat(os.path.join(root, name))
+            except OSError:
+                continue
+            newest = max(newest, sub.st_mtime_ns)
+            if stat.S_ISREG(sub.st_mode):
                 size += sub.st_size
-                newest = max(newest, sub.st_mtime_ns)
     return size, newest
 
 
@@ -77,7 +86,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     attributes. A path the local filesystem cannot stat is inferred on
     every read.
     """
-    stamp = _path_stamp(path)
+    stamp = source_stamp(path)
     seen = _PARQUET_SCHEMAS.setdefault(spark, {})
     hit = seen.get(path)
     if stamp is not None and hit is not None and hit[0] == stamp:

@@ -1,4 +1,5 @@
-"""Sinks: parquet / CSV / JSON writers, optionally hive-partitioned.
+"""Sinks: parquet / CSV / JSON writers, optionally hive-partitioned,
+and the one write-once publisher for layouts derived from a fixture.
 
 Round-tripped (write → read back → hash-compare) in
 tests/test_sources_sinks.py (SURVEY §5.2.6). ``partition_by`` writes
@@ -8,7 +9,16 @@ scan-side half of that contract is asserted in the same tests.
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import os
+import shutil
+import warnings
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
+
+from .readers import source_stamp
 
 
 def write_parquet(
@@ -62,56 +72,101 @@ def write_bucketed_table(
     w.saveAsTable(name)
 
 
+@contextmanager
+def _flock(path: str, mode: int):
+    with open(path, "a") as fh:
+        fcntl.flock(fh, mode)
+        try:
+            yield
+        finally:
+            fcntl.flock(fh, fcntl.LOCK_UN)
+
+
+def publish_once(src_path: str, loc: str, write) -> str:
+    """Publish the layout ``write(loc)`` derives from ``src_path`` at
+    most once per version of the source, and return ``loc``.
+
+    - **Freshness.** The layout is fresh only while ``<loc>/_SRC_STAMP``
+      equals the source's ``readers.source_stamp`` (summed size, newest
+      ``mtime_ns``). Size is in the stamp because a ``cp -p``
+      regeneration keeps the old mtime; an mtime ordering alone served
+      its stale rows (ADVICE r10).
+    - **Completion.** The stamp is written last, so a layout a crashed
+      or failed write left behind has none and is rewritten; so is a
+      layout from before stamps existed.
+    - **Pre-write stamp.** The stamp is taken before ``write`` starts:
+      a source regenerated mid-write then mismatches and the next call
+      rewrites, where a post-write stamp would pin the old rows to the
+      new source (ADVICE r11).
+    - **Vanished source.** A source that cannot be stat'd makes the
+      layout stale, never served on faith; since it cannot be rebuilt,
+      the call warns and raises ``FileNotFoundError`` before deleting
+      anything (ADVICE r11).
+    - **Concurrency.** Writers hold an exclusive ``flock`` on
+      ``<loc>.lock``, beside the layout, so every process that can see
+      the layout sees the lock (a lock under ``TMPDIR`` would not be
+      shared by a process with another ``TMPDIR``). A fresh layout is
+      confirmed under a shared lock, so it is never returned while a
+      writer is rewriting it (ADVICE r8, r10). A source regenerated
+      after the call returned is inherent to returning a location;
+      fixtures should not be regenerated under running readers.
+
+    ``write(loc)`` writes the whole layout to ``loc``, which does not
+    exist when it is called.
+    """
+    stamp_file = os.path.join(loc, "_SRC_STAMP")
+
+    def fresh(stamp) -> bool:
+        if stamp is None:
+            return False
+        try:
+            with open(stamp_file) as fh:
+                return fh.read() == "%d:%d" % stamp
+        except OSError:
+            return False
+
+    os.makedirs(os.path.dirname(loc), exist_ok=True)
+    lock = loc + ".lock"
+    if fresh(source_stamp(src_path)):
+        with _flock(lock, fcntl.LOCK_SH):
+            if fresh(source_stamp(src_path)):
+                return loc
+    with _flock(lock, fcntl.LOCK_EX):
+        stamp = source_stamp(src_path)
+        if fresh(stamp):
+            return loc
+        if stamp is None:
+            warnings.warn(
+                f"layout {loc}: source {src_path} cannot be stat'd — "
+                "treating the layout as STALE",
+                stacklevel=2,
+            )
+            raise FileNotFoundError(
+                f"layout {loc}: source {src_path} cannot be stat'd; "
+                "refusing to drop or rewrite the layout"
+            )
+        shutil.rmtree(loc, ignore_errors=True)
+        write(loc)
+        with open(stamp_file, "w") as fh:
+            fh.write("%d:%d" % stamp)
+    return loc
+
+
 def ensure_bucketed_pair(spark, sf_dir: str) -> tuple[str, str]:
     """Write-once bucketed orders/lineitem tables for ``sf_dir``;
     returns their catalog names.
 
-    The bucketed layout is the write-once/shuffle-never contract: both
-    facts bucketed on the join key with the same bucket count, so the
-    orderkey join needs NO exchange on either side. Table names carry
-    a hash of the ABSOLUTE source dir (the ADVICE r9 layout-keying
-    rule: distinct fixtures must never share a scratch identity), and
-    creation is serialized by an OS file lock: writers hold it
-    exclusive, and the fast path re-checks freshness under a SHARED
-    lock (ADVICE r10) so it can never return a layout that a
-    concurrent invalidator is mid-DROP on. The residual window — a
-    regeneration that starts AFTER a reader returned but before it
-    scans — is inherent to returning catalog names rather than data;
-    fixture regeneration should not run concurrently with readers.
-
-    Staleness rule (the ADVICE r9 invalidation discipline, same as the
-    partitioned-events layout): each published layout carries a
-    ``_SRC_STAMP`` sidecar recording the source parquet's
-    (size, mtime_ns) at write time; the layout is reused only while
-    the source still matches the stamp (ADVICE r10 — a plain
-    ``mtime >=`` check misses ``cp -p``-style regeneration that
-    preserves timestamps but changes size). Pre-stamp layouts fall
-    back to the mtime comparison. A vanished source (stat fails) is
-    treated as STALE (ADVICE r11 — serving it on faith could pin a
-    layout whose source was deleted for regeneration indefinitely);
-    the writer path then refuses to drop anything and raises
-    ``FileNotFoundError`` before any destructive step, so a
-    transiently-missing source never costs an existing layout. A
-    stale layout is dropped (catalog + files) and rewritten under the
-    exclusive lock.
-
-    Stamp TOCTOU (ADVICE r11): the stamp value is captured by
-    stat'ing the source BEFORE the bucketed write / CREATE TABLE
-    starts, not after it completes — a source regenerated mid-write
-    then yields a stamp that mismatches the new source, and the next
-    call invalidates, instead of a post-write stamp accidentally
-    matching the NEW source while the layout holds OLD data
-    (tests/test_bucketing.py pins both interleavings).
+    Both facts are bucketed on the join key with the same bucket
+    count, so the orderkey join needs NO exchange on either side.
     """
-    import hashlib
-    import os
-
-    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    plan = (
-        ("orders", f"b_orders_{tag}", "o_orderkey", ["o_orderkey"]),
-        ("lineitem", f"b_lineitem_{tag}", "l_orderkey", ["l_orderkey"]),
+    return _ensure_bucketed(
+        spark,
+        sf_dir,
+        (
+            ("orders", "b_orders", "o_orderkey", ["o_orderkey"]),
+            ("lineitem", "b_lineitem", "l_orderkey", ["l_orderkey"]),
+        ),
     )
-    return _ensure_bucketed(spark, sf_dir, plan, f"bucketed_{tag}")
 
 
 def ensure_bucketed_events(spark, sf_dir: str) -> tuple[str, str]:
@@ -122,159 +177,63 @@ def ensure_bucketed_events(spark, sf_dir: str) -> tuple[str, str]:
     ``user_id`` (sorted by user_id, ts — the sessionization window
     order) and ``customer`` on ``c_custkey`` with the same bucket
     count, so the skewed stream⋈dim equi-join and every
-    user_id-keyed aggregation/window read pre-shuffled buckets.
-    Same freshness/stamping/locking contract as
-    :func:`ensure_bucketed_pair` (shared ``_ensure_bucketed``
-    machinery; A/B receipt tools/receipts/bucketed_skew_ab_r12.txt)."""
-    import hashlib
-    import os
-
-    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    plan = (
-        ("events", f"b_events_{tag}", "user_id", ["user_id", "ts"]),
-        ("customer", f"b_customer_{tag}", "c_custkey", ["c_custkey"]),
+    user_id-keyed aggregation/window read pre-shuffled buckets
+    (A/B receipt tools/receipts/bucketed_skew_ab_r12.txt)."""
+    return _ensure_bucketed(
+        spark,
+        sf_dir,
+        (
+            ("events", "b_events", "user_id", ["user_id", "ts"]),
+            ("customer", "b_customer", "c_custkey", ["c_custkey"]),
+        ),
     )
-    return _ensure_bucketed(spark, sf_dir, plan, f"bucketed_ev_{tag}")
 
 
-def _ensure_bucketed(spark, sf_dir: str, plan, lock_tag: str):
-    """Shared write-once machinery behind the ``ensure_bucketed_*``
-    layouts; ``plan`` rows are (source table, catalog name, bucket
-    key, sort cols). The freshness, stamping, and locking contract is
-    documented on :func:`ensure_bucketed_pair` and pinned by
-    tests/test_bucketing.py."""
-    import fcntl
-    import os
-    import shutil
-    import tempfile
-    import warnings
+def _ensure_bucketed(spark, sf_dir: str, plan) -> tuple[str, ...]:
+    """Publish each ``plan`` row (source table, name prefix, bucket
+    key, sort cols) as an 8-bucket table through :func:`publish_once`.
 
+    Table names carry a hash of the ABSOLUTE source dir, so distinct
+    fixtures never share a layout (ADVICE r9). The catalog is
+    per-process but the warehouse persists: a fresh layout an earlier
+    process wrote is registered again in place as an external bucketed
+    table.
+    """
     from ..tables import load_table, table_path
 
-    names = tuple(name for _src, name, _key, _sort in plan)
+    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "/tmp/spark-graft-warehouse"
     ).removeprefix("file:")
+    names = []
+    for src, prefix, key, sort_cols in plan:
+        name = f"{prefix}_{tag}"
+        loc = os.path.join(warehouse, name.lower())
 
-    def _src_stat(src: str) -> str | None:
-        try:
-            st = os.stat(table_path(sf_dir, src))
-        except OSError:
-            return None
-        return f"{st.st_size}:{st.st_mtime_ns}"
-
-    def _stamp_path(name: str) -> str:
-        return os.path.join(warehouse, name.lower(), "_SRC_STAMP")
-
-    def _write_stamp(name: str, pre_stat: str) -> None:
-        # ``pre_stat`` was captured BEFORE the layout write began —
-        # never re-stat here (the ADVICE r11 mid-write-regeneration
-        # TOCTOU: a post-write stat can match a source that changed
-        # while we were writing the OLD source's data).
-        with open(_stamp_path(name), "w") as f:
-            f.write(pre_stat)
-
-    def _fresh(src: str, name: str, cur: str | None) -> bool:
-        success = os.path.join(warehouse, name.lower(), "_SUCCESS")
-        if not os.path.exists(success):
-            return False
-        if cur is None:
-            warnings.warn(
-                f"bucketed layout {name}: source parquet for {src!r} "
-                "cannot be stat'd — treating the layout as STALE "
-                "(ADVICE r11; it is never dropped on a failed stat)",
-                stacklevel=2,
+        def write(_loc):  # runs inside this iteration's publish_once
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            write_bucketed_table(
+                load_table(spark, sf_dir, src),
+                name,
+                [key],
+                num_buckets=8,
+                sort_cols=sort_cols,
             )
-            return False
-        try:
-            with open(_stamp_path(name)) as f:
-                return f.read().strip() == cur
-        except OSError:
-            # Pre-stamp layout: legacy mtime ordering, stamped on next
-            # rewrite.
-            try:
-                return os.path.getmtime(success) >= os.path.getmtime(
-                    table_path(sf_dir, src)
-                )
-            except OSError:
-                return True
 
-    lock_path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_{lock_tag}.lock"
-    )
-    if all(
-        spark.catalog.tableExists(n) and _fresh(s, n, _src_stat(s))
-        for s, n, _k, _srt in plan
-    ):
-        # Confirm under a shared lock: excludes a writer holding the
-        # exclusive lock mid-invalidation (ADVICE r10).
-        with open(lock_path, "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_SH)
-            try:
-                if all(
-                    _fresh(s, n, _src_stat(s)) for s, n, _k, _srt in plan
-                ):
-                    return names
-            finally:
-                fcntl.flock(lock, fcntl.LOCK_UN)
-    with open(lock_path, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        try:
-            for src, name, key, sort_cols in plan:
-                # One pre-write stat per table: the freshness decision,
-                # every destructive step, and the stamp all use THIS
-                # value, so a regeneration racing any later step can
-                # only produce a mismatched stamp (-> next call
-                # invalidates), never a stale-but-stamped layout.
-                pre = _src_stat(src)
-                fresh = _fresh(src, name, pre)
-                if spark.catalog.tableExists(name) and fresh:
-                    continue
-                if pre is None:
-                    # The source is gone: the layout (if any) is stale
-                    # by rule, but a rewrite is impossible — fail loud
-                    # BEFORE dropping anything so a transiently-missing
-                    # source never destroys a servable layout.
-                    raise FileNotFoundError(
-                        f"bucketed layout {name}: source parquet for "
-                        f"{src!r} under {sf_dir!r} cannot be stat'd; "
-                        "refusing to drop/rewrite the layout"
-                    )
-                if not fresh:
-                    spark.sql(f"DROP TABLE IF EXISTS {name}")
-                # The Spark catalog is per-process but the warehouse
-                # directory persists: a COMPLETE layout (_SUCCESS) from
-                # an earlier process is re-registered in place as an
-                # external bucketed table (data written once per
-                # source version); a partial layout from a crashed
-                # write and a stale layout from a regenerated fixture
-                # are both discarded.
-                loc = os.path.join(warehouse, name.lower())
-                if fresh and os.path.exists(os.path.join(loc, "_SUCCESS")):
-                    cols = ", ".join(
-                        f"{f.name} {f.dataType.simpleString()}"
-                        for f in load_table(spark, sf_dir, src).schema.fields
-                    )
-                    spark.sql(
-                        f"CREATE TABLE {name} ({cols}) USING parquet "
-                        f"CLUSTERED BY ({key}) "
-                        f"SORTED BY ({', '.join(sort_cols)}) "
-                        f"INTO 8 BUCKETS LOCATION '{loc}'"
-                    )
-                    _write_stamp(name, pre)
-                    continue
-                shutil.rmtree(loc, ignore_errors=True)
-                write_bucketed_table(
-                    load_table(spark, sf_dir, src),
-                    name,
-                    [key],
-                    num_buckets=8,
-                    sort_cols=sort_cols,
-                )
-                _write_stamp(name, pre)
-        finally:
-            fcntl.flock(lock, fcntl.LOCK_UN)
-    return names
+        publish_once(table_path(sf_dir, src), loc, write)
+        if not spark.catalog.tableExists(name):
+            cols = ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in load_table(spark, sf_dir, src).schema.fields
+            )
+            spark.sql(
+                f"CREATE TABLE {name} ({cols}) USING parquet "
+                f"CLUSTERED BY ({key}) "
+                f"SORTED BY ({', '.join(sort_cols)}) "
+                f"INTO 8 BUCKETS LOCATION '{loc}'"
+            )
+        names.append(name)
+    return tuple(names)
 
 
 def write_json(

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import autosize_shuffle_partitions, ensure_session_confs
-from .sources.readers import read_parquet
+from .sources.readers import read_parquet, source_stamp
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -41,45 +41,13 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: On-disk bytes per input path, cached for the process lifetime —
-#: fixtures are immutable, and the loader runs for every input of
-#: every query, so a stat-walk per call would dominate tiny queries.
-_PATH_BYTES_CACHE: dict[str, int] = {}
-
-
-def input_bytes(path: str) -> int:
-    """Compressed on-disk size of a parquet file or directory layout."""
-    cached = _PATH_BYTES_CACHE.get(path)
-    if cached is not None:
-        return cached
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    else:
-        try:
-            total = os.path.getsize(path)
-        except OSError:
-            total = 0
-    # ADVICE r9: never cache a 0 — an absent-then-created fixture (a
-    # generator writing into a fresh dir mid-process) would otherwise
-    # be sized 0 forever and never trigger shuffle autosizing.
-    if total > 0:
-        _PATH_BYTES_CACHE[path] = total
-    return total
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
     path = table_path(sf_dir, name)
     # VERDICT r8 item 2: shuffle sizing follows the data, not a knob.
-    autosize_shuffle_partitions(spark, input_bytes(path))
+    autosize_shuffle_partitions(spark, (source_stamp(path) or (0, 0))[0])
     df = read_parquet(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -151,7 +119,8 @@ def load_skew_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
     # Shuffle autosizing keys on the SOURCE bytes, same as the flat
     # path — the bucketed copy holds identical data.
-    autosize_shuffle_partitions(spark, input_bytes(table_path(sf_dir, name)))
+    path = table_path(sf_dir, name)
+    autosize_shuffle_partitions(spark, (source_stamp(path) or (0, 0))[0])
     return spark.table(b_events if name == "events" else b_customer)
 
 

@@ -83,131 +83,132 @@ def test_groupby_on_bucket_key_avoids_shuffle(spark, bucketed):
     assert "Exchange hashpartitioning" not in plan, plan[:800]
 
 
-def test_ensure_bucketed_pair_invalidates_on_fixture_regen(spark, tmp_path):
-    """ADVICE r9 staleness discipline applied to the bucketed pair: a
-    regenerated source fixture (newer mtime) must drop and rewrite the
-    published bucketed layout instead of serving the old rows."""
+#: The two derived-layout families ``sources.sinks.publish_once``
+#: serves: the bucketed pair (read through its lineitem table) and the
+#: month-partitioned orders path. Each maps to the source table the
+#: freshness tests regenerate and its key column.
+FAMILIES = {"bucketed": ("lineitem", "l_orderkey"), "path": ("orders", "o_orderkey")}
+
+
+@pytest.fixture
+def fx(spark, tmp_path):
+    """orders + lineitem copied into a tmp fixture dir; afterwards the
+    tables, layouts and lock files derived from it are removed."""
+    import glob
+    import hashlib
     import os
+    import pathlib
     import shutil
-
-    import duckdb
-
-    from bigdataprojectspring16_spark.sources.sinks import (
-        ensure_bucketed_pair,
-    )
 
     fx = tmp_path / "fx"
     fx.mkdir()
     for t in ("orders", "lineitem"):
         shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
+    yield fx
+    tag = hashlib.sha1(os.path.abspath(fx).encode()).hexdigest()[:12]
+    for t in ("orders", "lineitem"):
+        spark.sql(f"DROP TABLE IF EXISTS b_{t}_{tag}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    for base in (warehouse, repo / ".tmp_partitioned"):
+        for p in glob.glob(os.path.join(base, f"*{tag}*")):
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
-    names = ensure_bucketed_pair(spark, str(fx))
-    n_before = spark.table(names[1]).count()
 
-    # Regenerate lineitem with half the rows and a strictly newer
-    # mtime (the generator rewrites the file in place).
+def _publish(spark, family, fx):
+    """Publish ``family``'s layout over ``fx``: (its handle, a count of
+    the rows it serves for the table the tests regenerate)."""
+    from bigdataprojectspring16_spark.operators import scans
+    from bigdataprojectspring16_spark.sources.sinks import ensure_bucketed_pair
+
+    if family == "bucketed":
+        names = ensure_bucketed_pair(spark, str(fx))
+        return names, lambda: spark.table(names[1]).count()
+    path = scans.partitioned_orders_path(spark, str(fx))
+    return path, lambda: spark.read.parquet(path).count()
+
+
+def _regen_half(fx, family) -> int:
+    """Rewrite ``family``'s source table in ``fx`` with its even-keyed
+    half (the generator rewriting in place); returns the new count."""
+    import duckdb
+
+    table, key = FAMILIES[family]
     con = duckdb.connect()
     con.execute(
-        f"""COPY (SELECT * FROM '{SF_DIR}/lineitem.parquet'
-                  WHERE l_orderkey % 2 = 0)
-            TO '{fx}/lineitem.parquet' (FORMAT PARQUET)"""
+        f"""COPY (SELECT * FROM '{SF_DIR}/{table}.parquet'
+                  WHERE {key} % 2 = 0)
+            TO '{fx}/{table}.parquet' (FORMAT PARQUET)"""
     )
-    n_new = con.execute(
-        f"SELECT count(*) FROM '{fx}/lineitem.parquet'"
-    ).fetchone()[0]
+    n = con.execute(f"SELECT count(*) FROM '{fx}/{table}.parquet'").fetchone()[0]
     con.close()
-    future = os.path.getmtime(fx / "lineitem.parquet") + 5
-    os.utime(fx / "lineitem.parquet", (future, future))
-
-    names2 = ensure_bucketed_pair(spark, str(fx))
-    assert names2 == names
-    assert spark.table(names2[1]).count() == n_new != n_before
-    # orders was untouched: its layout is fresh and must be reused.
-    assert spark.table(names2[0]).count() == spark.read.parquet(
-        str(fx / "orders.parquet")
-    ).count()
-    for n in names2:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
+    return n
 
 
-def test_ensure_bucketed_pair_invalidates_on_preserved_mtime(spark, tmp_path):
+@pytest.mark.parametrize("family", FAMILIES)
+def test_ensure_bucketed_pair_invalidates_on_fixture_regen(spark, fx, family):
+    """ADVICE r9 staleness discipline: a regenerated source fixture
+    (newer mtime) must rewrite the published layout instead of serving
+    the old rows."""
+    import os
+
+    handle, rows = _publish(spark, family, fx)
+    n_before = rows()
+
+    n_new = _regen_half(fx, family)
+    src = fx / f"{FAMILIES[family][0]}.parquet"
+    future = os.path.getmtime(src) + 5
+    os.utime(src, (future, future))
+
+    handle2, rows2 = _publish(spark, family, fx)
+    assert handle2 == handle
+    assert rows2() == n_new != n_before
+    if family == "bucketed":
+        # orders was untouched: its layout is fresh and must be reused.
+        assert spark.table(handle2[0]).count() == spark.read.parquet(
+            str(fx / "orders.parquet")
+        ).count()
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_ensure_bucketed_pair_invalidates_on_preserved_mtime(spark, fx, family):
     """ADVICE r10: freshness is keyed on a (size, mtime_ns) stamp, so a
     regeneration that PRESERVES the source mtime (cp -p, coarse-mtime
     filesystems) but changes content size still invalidates the
     layout — the mtime-ordering check alone would serve stale rows."""
     import os
-    import shutil
 
-    import duckdb
+    handle, rows = _publish(spark, family, fx)
+    n_before = rows()
 
-    from bigdataprojectspring16_spark.sources.sinks import (
-        ensure_bucketed_pair,
-    )
+    # Regenerate with half the rows, then PIN the old mtime back onto
+    # the new file (the cp -p scenario).
+    src = fx / f"{FAMILIES[family][0]}.parquet"
+    old = os.stat(src)
+    n_new = _regen_half(fx, family)
+    os.utime(src, ns=(old.st_mtime_ns, old.st_mtime_ns))
 
-    fx = tmp_path / "fx"
-    fx.mkdir()
-    for t in ("orders", "lineitem"):
-        shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
-
-    names = ensure_bucketed_pair(spark, str(fx))
-    n_before = spark.table(names[1]).count()
-
-    # Regenerate lineitem with half the rows, then PIN the old mtime
-    # back onto the new file (the cp -p scenario).
-    old = os.stat(fx / "lineitem.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * FROM '{SF_DIR}/lineitem.parquet'
-                  WHERE l_orderkey % 2 = 0)
-            TO '{fx}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    n_new = con.execute(
-        f"SELECT count(*) FROM '{fx}/lineitem.parquet'"
-    ).fetchone()[0]
-    con.close()
-    os.utime(fx / "lineitem.parquet", ns=(old.st_mtime_ns, old.st_mtime_ns))
-
-    names2 = ensure_bucketed_pair(spark, str(fx))
-    assert names2 == names
-    assert spark.table(names2[1]).count() == n_new != n_before
-    for n in names2:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
+    handle2, rows2 = _publish(spark, family, fx)
+    assert handle2 == handle
+    assert rows2() == n_new != n_before
 
 
-def test_ensure_bucketed_pair_stamp_is_pre_write(spark, tmp_path, monkeypatch):
+def test_ensure_bucketed_pair_stamp_is_pre_write(spark, fx, monkeypatch):
     """ADVICE r11 mid-write TOCTOU: the _SRC_STAMP must record the
     source's stat from BEFORE the bucketed write started. If the
     source is regenerated while the write is in flight, the layout
     holds OLD rows — a post-write stamp would match the NEW source
     and serve those stale rows indefinitely; the pre-write stamp
-    mismatches and the next call rewrites."""
-    import shutil
-
-    import duckdb
-
+    mismatches and the next call rewrites. Bucketed only: both
+    families share ``publish_once``'s stamping."""
     from bigdataprojectspring16_spark.sources import sinks
 
-    fx = tmp_path / "fx"
-    fx.mkdir()
-    for t in ("orders", "lineitem"):
-        shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
     n_before = spark.read.parquet(str(fx / "lineitem.parquet")).count()
 
     real_write = sinks.write_bucketed_table
-
-    def regen_lineitem():
-        con = duckdb.connect()
-        con.execute(
-            f"""COPY (SELECT * FROM '{SF_DIR}/lineitem.parquet'
-                      WHERE l_orderkey % 2 = 0)
-                TO '{fx}/lineitem.parquet' (FORMAT PARQUET)"""
-        )
-        n = con.execute(
-            f"SELECT count(*) FROM '{fx}/lineitem.parquet'"
-        ).fetchone()[0]
-        con.close()
-        return n
-
     n_new = {}
 
     def racing_write(df, name, bucket_cols, num_buckets=8, sort_cols=None):
@@ -216,7 +217,7 @@ def test_ensure_bucketed_pair_stamp_is_pre_write(spark, tmp_path, monkeypatch):
         # post-write stamping could happen.
         real_write(df, name, bucket_cols, num_buckets, sort_cols)
         if name.startswith("b_lineitem") and not n_new:
-            n_new["n"] = regen_lineitem()
+            n_new["n"] = _regen_half(fx, "bucketed")
 
     monkeypatch.setattr(sinks, "write_bucketed_table", racing_write)
     names = sinks.ensure_bucketed_pair(spark, str(fx))
@@ -229,48 +230,34 @@ def test_ensure_bucketed_pair_stamp_is_pre_write(spark, tmp_path, monkeypatch):
     names2 = sinks.ensure_bucketed_pair(spark, str(fx))
     assert names2 == names
     assert spark.table(names2[1]).count() == n_new["n"]
-    for n in names2:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
-def test_ensure_bucketed_pair_vanished_source_fails_loud(spark, tmp_path):
+@pytest.mark.parametrize("family", FAMILIES)
+def test_ensure_bucketed_pair_vanished_source_fails_loud(spark, fx, family):
     """ADVICE r11: a source that cannot be stat'd makes the layout
     STALE (never served on faith), and the writer path refuses to
     drop anything it cannot rebuild — FileNotFoundError, layout
     intact. Restoring the identical file resumes the fast path."""
-    import shutil
+    handle, rows = _publish(spark, family, fx)
+    n_rows = rows()
 
-    import pytest as _pytest
-
-    from bigdataprojectspring16_spark.sources.sinks import (
-        ensure_bucketed_pair,
-    )
-
-    fx = tmp_path / "fx"
-    fx.mkdir()
-    for t in ("orders", "lineitem"):
-        shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
-
-    names = ensure_bucketed_pair(spark, str(fx))
-    n_rows = spark.table(names[1]).count()
-
-    hidden = fx / "lineitem.hidden"
-    (fx / "lineitem.parquet").rename(hidden)
-    with _pytest.warns(UserWarning, match="STALE"):
-        with _pytest.raises(FileNotFoundError, match="refusing to drop"):
-            ensure_bucketed_pair(spark, str(fx))
+    src = fx / f"{FAMILIES[family][0]}.parquet"
+    hidden = fx / "hidden"
+    src.rename(hidden)
+    with pytest.warns(UserWarning, match="STALE"):
+        with pytest.raises(FileNotFoundError, match="refusing to drop"):
+            _publish(spark, family, fx)
     # The refusal left the existing layout fully servable.
-    assert spark.catalog.tableExists(names[1])
-    assert spark.table(names[1]).count() == n_rows
+    if family == "bucketed":
+        assert spark.catalog.tableExists(handle[1])
+    assert rows() == n_rows
 
     # Same bytes back (rename preserves size + mtime_ns): the stamp
     # matches again and the fast path serves without a rewrite.
-    hidden.rename(fx / "lineitem.parquet")
-    names2 = ensure_bucketed_pair(spark, str(fx))
-    assert names2 == names
-    assert spark.table(names2[1]).count() == n_rows
-    for n in names2:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
+    hidden.rename(src)
+    handle2, rows2 = _publish(spark, family, fx)
+    assert handle2 == handle
+    assert rows2() == n_rows
 
 
 # --- r13: the skew-family declared consumer (VERDICT r12 #1) --------

@@ -14,9 +14,9 @@ Cache entry = one JSON file under ``tools/oracle_cache/`` named
   * the comparator source (``comparator.py`` bytes — the hash
     discipline IS part of the verdict; a comparator change must
     invalidate every cached hash),
-  * a per-table fingerprint of the sf dir (name, size, mtime_ns for
-    each of the ten parquet tables — regenerated testdata, even
-    byte-identical, re-keys the cache; safe over cheap), and
+  * a per-table fingerprint of the sf dir (name, size and content
+    sha256 of each of the ten parquet tables — a copied fixture keeps
+    its entries, any changed byte re-keys them), and
   * the oracle SQL string itself.
 
 The cached verdict is exactly what the comparator consumes:
@@ -46,44 +46,21 @@ def comparator_version() -> str:
         return hashlib.sha256(fh.read()).hexdigest()[:12]
 
 
-def _edge_hash(path: str, st: os.stat_result, edge: int = 65536) -> str:
-    """sha256 over the first and last ``edge`` bytes of the file — the
-    cheap content signal (ADVICE r12): an in-place regeneration that
-    preserves (size, mtime_ns) — e.g. ``cp -p`` of a same-size file —
-    must still re-key the cache. Parquet puts the footer (row-group
-    offsets, column stats, created_by) in the tail, so any
-    re-encoding lands in the last 64 KiB even when the head repeats.
-    """
-    h = hashlib.sha256()
-    with open(path, "rb") as fh:
-        h.update(fh.read(edge))
-        if st.st_size > edge:
-            fh.seek(max(edge, st.st_size - edge))
-            h.update(fh.read(edge))
-    return h.hexdigest()[:16]
-
-
 def data_fingerprint(sf_dir: str) -> str:
-    """Per-table (size, mtime_ns, edge-content-hash) fingerprint.
+    """sha256 over each table's name, size and full-content sha256 — the
+    rule of ``perfbench/run.py:fixture_fingerprint``.
 
-    r13 (ADVICE r12): the fingerprint gained the edge hash — the old
-    (size, mtime_ns)-only form replayed stale verdicts for a
-    timestamp-preserving regeneration, the exact failure mode the
-    bucketed-layout stamps were hardened against in r11. Changing the
-    fingerprint re-keys every existing entry; a one-shot migration
-    re-keyed the r12 cache once under the old scheme's own trust
-    (receipt oracle_cache_migration_r13.txt; the script is retired),
-    and the mechanical cache audit (DRIVER_SIM_CACHE_AUDIT) re-runs
-    sampled verdicts live per sweep from then on.
+    No mtime: a ``cp -r`` copy or a byte-identical regeneration of a
+    fixture keeps its cache entries, and a content change re-keys them
+    even when it keeps the size and mtime (``cp -p``).
     """
     parts = []
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         try:
-            st = os.stat(path)
-            parts.append(
-                f"{t}:{st.st_size}:{st.st_mtime_ns}:{_edge_hash(path, st)}"
-            )
+            with open(path, "rb") as fh:
+                digest = hashlib.file_digest(fh, "sha256").hexdigest()
+            parts.append(f"{t}:{os.path.getsize(path)}:{digest}")
         except OSError:
             parts.append(f"{t}:absent")
     return hashlib.sha256("|".join(parts).encode()).hexdigest()[:12]
