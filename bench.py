@@ -1,12 +1,15 @@
 #!/usr/bin/env python
 """Benchmark harness — prints ONE JSON line the driver records.
 
+    python bench.py [key ...]
+
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is
 executed with a count()-style full materialization (no driver-side
 collect of payload rows), timed wall-clock, best-of-N after a warmup
 pass that also primes the parquet footer/page cache the way a real
-cluster's second query would be.
+cluster's second query would be. Keys given as arguments replace the
+headline set.
 """
 
 from __future__ import annotations
@@ -144,7 +147,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     job_counts: dict[str, int] = {}
     jobs_unstable: dict[str, list[int]] = {}
-    for key in HEADLINE:
+    for key in sys.argv[1:] or HEADLINE:
         fn = QUERIES[key]
         fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()  # warmup
         best = float("inf")

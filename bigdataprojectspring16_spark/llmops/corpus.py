@@ -547,7 +547,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.array_distinct(F.split("text", " "))).alias("toks"),
     )
     reps, members = contract_identical_sets(t)
-    # Whole-pipeline token coding (default ON — dedup.coded_sets):
+    # Whole-pipeline token coding (dedup.coded_sets):
     # the sweep's postings, prefix self-join and exact-verify all
     # shuffle 8-byte codes; recall 1.0 under any global token order.
     reps = coded_sets(reps, "toks")

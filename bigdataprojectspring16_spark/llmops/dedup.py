@@ -18,74 +18,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.barriers import barrier, decade_regime
+from ..plans.barriers import decade_regime
 from ..registry import query
 from ..session import pinned_stage_width
 from ..tables import load_table
 
-#: When True, frames referenced from several plan branches (the
-#: contracted rep/member frames, the prefix posting table, the band
-#: signature table) get a LAZY localCheckpoint so each is evaluated
-#: once per query instead of once per reference (Catalyst has no
-#: cross-branch common-subexpression elimination; the r3 receipts
-#: showed 40-72 parquet scans in one near-dup plan).  The shipped
-#: value records the measured verdict (SCALING.md §CC, "The inverse
-#: result"): False — at fixture scale
-#: the barriers SERIALIZE the DAG (each checkpoint is a job
-#: boundary the scheduler must drain) and the lost pipelining costs
-#: more than the bounded number of re-evaluations saves
-#: (dedup_minhash_lsh -19.8% median, B slower in 5/5 interleaved
-#: pairs).  The knob exists because the trade inverts when scans
-#: dominate: at 100 TB each re-evaluation re-reads and re-tokenizes
-#: the corpus, and a deployment flips this True — substituting a
-#: RELIABLE materialization for localCheckpoint: executor-local
-#: checkpoint blocks are unreplicated and the truncated lineage makes
-#: them unrecoverable on executor loss, fine on local[n], fatal on a
-#: preemptible cluster — set
-#: spark.bigdataprojectspring16.barrierMode=durable there (reliable
-#: checkpoint(); see plans/barriers.py — a persist(MEMORY_AND_DISK_2)
-#: substitute was measured and REJECTED r5: persist keeps lineage and
-#: multi-reference fixpoint plans grow exponentially).
-MATERIALIZE_SHARED = False
-MATERIALIZE_SHARED_CONF = "spark.bigdataprojectspring16.materializeShared"
-
-
-def _conf_flag(spark: SparkSession, key: str, default) -> bool:
-    """An on/off session conf; the module global is the default."""
-    v = str(spark.conf.get(key, None) or default).strip().lower()
-    if v in ("1", "true", "yes", "on"):
-        return True
-    if v in ("0", "false", "no", "off"):
-        return False
-    raise ValueError(f"{key}={v!r}: expected on | off")
-
-
-def _materialize_shared(df: DataFrame) -> bool:
-    return _conf_flag(df.sparkSession, MATERIALIZE_SHARED_CONF, MATERIALIZE_SHARED)
-
-
-#: Exact-verify token coding (SCALING.md §SF100, VERDICT r11 #3).
-#: The verify stage ships candidate-pairs × token-ARRAYS — on the
-#: template-heavy fixtures ~30x the corpus bytes, the binding local
-#: scratch envelope at sf30/sf100. Jaccard is a function of the token
-#: SET, and |intersect| / |union| are preserved when every token is
-#: replaced by its xxhash64 code (8 B fixed-width vs ~15 B strings;
-#: a pair's verdict flips only if two DISTINCT tokens inside that
-#: pair's union collide in 64 bits — P < n²/2⁶⁵ ≈ 1e-15 per pair at
-#: ~150-token sets). Values: ``on`` (default) | ``off`` (the string
-#: form, kept as the reference the coded plan is pinned against).
-#: Default ON by measurement
-#: (tools/receipts/verify_codes_ab_r12.txt): all five coded keys
-#: hash-IDENTICAL to the string form at sf0.1 with the SAME job
-#: counts; fair warmed walls are -22% on the gram-based keys,
-#: neutral on the token-based ones, +4% on threshold_sweep — and
-#: the decade receipts are decisive (sf30 fits local scratch at the
-#: default heap only coded; sf50's ~59 GB peak spill only fits
-#: coded). Fixture-scale on-vs-off equality is pinned in
-#: tests/test_scale_paths.py; every driver oracle check runs the
-#: coded plan.
-VERIFY_TOKEN_CODES = "on"
-VERIFY_TOKEN_CODES_CONF = "spark.bigdataprojectspring16.verifyTokenCodes"
+#: Shared frames (the contracted rep/member frames, the prefix
+#: postings, the band signatures) are referenced from several plan
+#: branches and carry NO barrier: they are scan + narrow-map subtrees
+#: (tokenize, digest), cheap to re-evaluate, and a checkpoint's job
+#: boundary serializes a DAG the scheduler otherwise overlaps
+#: (dedup_minhash_lsh a -19.8% median regression with them barriered,
+#: SCALING.md §CC "The inverse result"). The rule: let scan + narrow-map
+#: subtrees re-evaluate; materialize a subtree that contains a large
+#: shuffle (PageRank's edge build, llmops/graph.py).
+#:
+#: Every set column is coded as xxhash64 BIGINTs before candidate
+#: generation and verify (SCALING.md §SF100): Jaccard is a function of
+#: the token SET, and |intersect| / |union| survive the coding unless
+#: two DISTINCT tokens inside one pair's union collide in 64 bits —
+#: P < n²/2⁶⁵ ≈ 1e-15 per pair at ~150-token sets. The shuffles then
+#: carry 8-byte codes instead of ~15 B strings (sf30/sf50 fit local
+#: scratch only coded, tools/receipts/verify_codes_ab_r12.txt).
 
 #: The near-dup Jaccard threshold every pairwise key verifies at.
 #: Code sites import this; the ORACLE SQL strings and docstrings
@@ -96,31 +50,23 @@ VERIFY_TOKEN_CODES_CONF = "spark.bigdataprojectspring16.verifyTokenCodes"
 NEAR_DUP_JACCARD = 0.95
 
 
-def verify_token_codes(spark: SparkSession) -> bool:
-    return _conf_flag(spark, VERIFY_TOKEN_CODES_CONF, VERIFY_TOKEN_CODES)
-
-
 def coded_verify_side(t: DataFrame, set_col: str, alias: str) -> DataFrame:
     """One side of an exact-verify join: ``(doc_id, <alias>)`` where
-    ``<alias>`` is the set column as xxhash64 BIGINT codes when the
-    session's verify-coding knob is active, else the raw strings.
+    ``<alias>`` is the set column as xxhash64 BIGINT codes.
 
-    The projection sits ABOVE the contracted/barriered rep frame and
+    The projection sits ABOVE the contracted rep frame and
     BELOW the verify join's exchange, so the hashing runs map-side
     and the shuffle carries the 8-byte codes. array_intersect /
     array_union treat their inputs as sets (results are distinct), so
     size ratios — and therefore the rounded Jaccard — are identical
     to the string form absent a 64-bit collision inside one pair's
     union."""
-    col = F.col(set_col)
-    if verify_token_codes(t.sparkSession):
-        col = F.transform(col, lambda x: F.xxhash64(x))
+    col = F.transform(set_col, lambda x: F.xxhash64(x))
     return t.select("doc_id", col.alias(alias))
 
 
 def coded_sets(t: DataFrame, set_col: str) -> DataFrame:
-    """Replace a set column's string elements with xxhash64 codes
-    (knob-gated, same knob as :func:`coded_verify_side`) BEFORE
+    """Replace a set column's string elements with xxhash64 codes BEFORE
     candidate generation — so the fact-sized posting explode, the
     document-frequency aggregation, the prefix self-join, AND the
     exact-verify all shuffle 8-byte codes instead of ~15 B strings.
@@ -131,15 +77,10 @@ def coded_sets(t: DataFrame, set_col: str) -> DataFrame:
     order onto (df, code) — and even merging the rare colliding
     term pair into one posting key — can only grow the candidate
     superset, never drop a true pair; the exact verify then yields
-    the identical final result (pinned on/off in
-    tests/test_scale_paths.py). NOT applied to the minhash path:
+    the identical final result. NOT applied to the minhash path:
     its signatures are functions of the token STRINGS, and re-basing
     them would re-roll the banding's per-copy recall."""
-    if verify_token_codes(t.sparkSession):
-        return t.withColumn(
-            set_col, F.transform(set_col, lambda x: F.xxhash64(x))
-        )
-    return t
+    return t.withColumn(set_col, F.transform(set_col, lambda x: F.xxhash64(x)))
 
 
 def contract_identical_sets(t: DataFrame, set_col: str = "toks"):
@@ -206,21 +147,7 @@ def contract_identical_sets(t: DataFrame, set_col: str = "toks"):
     reps = t.join(
         groups.select(F.col("rep_id").alias("doc_id")), "doc_id"
     ).select("doc_id", set_col)
-    # Lazy materialization barrier (r4): every caller references reps
-    # and/or members several times (signature agg, size frames, both
-    # verify sides, the member expansion), and Catalyst performs no
-    # cross-reference common-subexpression elimination — without the
-    # barrier each reference re-runs the tokenize + digest + contract
-    # lineage from the parquet scan (the r3 receipts show 40-72 scans
-    # in ONE near-dup plan).  eager=False keeps the declared query a
-    # single driver action; the first action materializes each frame
-    # once and later references read the checkpointed blocks.  At
-    # 100 TB re-tokenizing the corpus per reference is the dominant
-    # avoidable cost; the checkpoint stores only (doc_id, set) rows.
-    if not _materialize_shared(t):
-        return reps, members
-    disk = decade_regime(reps.sparkSession)
-    return barrier(reps, disk=disk), barrier(members, disk=disk)
+    return reps, members
 
 
 def expand_rep_pairs(
@@ -343,14 +270,6 @@ def prefix_filter_candidates(
     # with the data and OOMed the default 8 g heap (VERDICT r9 item 4).
     width = pinned_stage_width(t.sparkSession)
     prefix = prefix.repartition(width, "term")
-    if _materialize_shared(t):
-        prefix = barrier(prefix, disk=decade_regime(t.sparkSession))
-    # ^ lazy barrier AFTER the pinned repartition: both join sides
-    # below reference `prefix`, and without it each side re-runs the
-    # explode + document-frequency + window lineage (no cross-branch
-    # CSE in Catalyst).  LogicalRDD preserves the hash partitioning,
-    # so the self-join still sees co-partitioned inputs — one
-    # materialized shuffle total, now genuinely evaluated once.
     pa = prefix.select(
         F.col("doc_id").alias("doc_a"),
         F.col("sz").alias("sz_a"),
@@ -500,8 +419,7 @@ def _minhash_contraction(spark: SparkSession, sf_dir: str):
 
 def _minhash_bands_frame(spark: SparkSession, t: DataFrame) -> DataFrame:
     """Phase 2: banded minhash signatures (doc_id, sz, band, sig) off
-    the contracted rep frame (16 hash fns, 4 bands of 4), barriered
-    when shared-frame materialization is on."""
+    the contracted rep frame (16 hash fns, 4 bands of 4)."""
     # Decade width guard (r11, the sf100 lesson; RELOCATED r13): the
     # 16-minima partial map holds ~600 B per distinct doc, so its
     # stage must run at pinned width, not an AQE-coalesced one. The
@@ -539,11 +457,6 @@ def _minhash_bands_frame(spark: SparkSession, t: DataFrame) -> DataFrame:
             "doc_id", "sz", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
         )
     )
-    if _materialize_shared(t):
-        # Lazy barrier: the band self-join below references this frame
-        # twice; without it each side re-runs the 16-way minhash
-        # aggregation over the exploded token stream.
-        bands = barrier(bands, disk=decade_regime(spark))
     return bands
 
 
@@ -598,12 +511,10 @@ def _minhash_candidate_pairs(spark: SparkSession, bands: DataFrame) -> DataFrame
 
 def _minhash_verify_pairs(t: DataFrame, cand: DataFrame) -> DataFrame:
     """Phase 4: exact token-set Jaccard on the candidates, coded
-    map-side (the xxhash64 verify knob), threshold 0.95."""
-    # Verify sides carry xxhash64 codes instead of token strings
-    # (default ON; the knob's docstring has the measured receipts) —
+    map-side (xxhash64, see the module's coding note), threshold 0.95."""
+    # Verify sides carry xxhash64 codes instead of token strings —
     # the 2-4x verify-shuffle cut that brings the sf30 sweep inside
-    # local scratch (SCALING.md §SF100; on-vs-off equality pinned in
-    # tests/test_scale_paths.py).
+    # local scratch (SCALING.md §SF100).
     ta = coded_verify_side(t, "toks", "toks_a").withColumnRenamed(
         "doc_id", "doc_a"
     )

@@ -55,8 +55,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row global aggregates.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table
@@ -133,8 +132,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``to_date`` aligns the output type.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table
@@ -306,8 +304,7 @@ def sessionize_gap_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a non-boundary event share a timestamp.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table
@@ -664,8 +661,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning the sessionization family already uses.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table
@@ -1273,8 +1269,7 @@ def events_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible after rounding (measured: 2210.765 vs 2210.767).
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table
@@ -1498,8 +1493,7 @@ def events_inter_arrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     either engine.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table

@@ -450,8 +450,7 @@ def join_skew_events_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-dp round of the float sum.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table

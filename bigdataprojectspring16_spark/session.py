@@ -22,10 +22,12 @@ from pyspark.sql import SparkSession
 ENGINE_CONFS: dict[str, str] = {
     # Correctness-critical (runtime settable).
     "spark.sql.session.timeZone": "UTC",
-    # events.ts is TIMESTAMP(NANOS) in parquet, which Spark 4 rejects
-    # (PARQUET_TYPE_ILLEGAL) — read as int64 ns and let the loader
-    # convert to µs timestamps (tables.py, matching DuckDB's ns→µs
-    # truncation).
+    # A parquet TIMESTAMP(NANOS) column, which Spark 4 rejects
+    # (PARQUET_TYPE_ILLEGAL), reads as int64 ns and the loader
+    # converts it to µs timestamps (tables.py, matching DuckDB's ns→µs
+    # truncation). The fixtures' events.ts is TIMESTAMP(MICROS,
+    # isAdjustedToUTC=false) and does not need it: that naive µs
+    # column reads as TIMESTAMP_NTZ.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Adaptive execution: runtime re-plan, partition coalescing,
     # skew-join splitting — the 100 TB levers (SURVEY §4).
@@ -71,9 +73,7 @@ ENGINE_CONFS: dict[str, str] = {
 #: session.py:45).
 _SHUFFLE_PARTITIONS_KEY = "spark.sql.shuffle.partitions"
 _SPARK_STOCK_SHUFFLE_PARTITIONS = "200"
-_TUNED_SHUFFLE_PARTITIONS = os.environ.get(
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-)
+_TUNED_SHUFFLE_PARTITIONS = "32"
 
 #: Input-proportional shuffle sizing (VERDICT r8 item 2). The sf10
 #: decade measured the failure mode: a fixed 32-partition default
@@ -158,19 +158,17 @@ def autosize_shuffle_partitions(
     opens, so a 100 TB user gets the sf10 lesson applied without
     knowing it. Policy:
 
-    - **Manual mode wins**: if ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` is
-      set, the operator owns the knob — no auto-sizing.
     - **Raise-only, monotone**: the session conf only ever grows
       (the max input seen so far governs); AQE coalesces the excess
       per-query, so a small query after a big one is not penalized.
     - **Never clobber host tuning**: we only touch the conf when its
       current value is the stock default, our tuned floor, or a value
-      this function itself set earlier on this session.
+      this function itself set earlier on this session. Manual
+      sizing is therefore Spark's own ``spark.sql.shuffle.partitions``
+      set to any other value.
 
     Returns the newly applied value, or None when left alone.
     """
-    if os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
-        return None
     required = shuffle_partitions_for_bytes(input_bytes)
     try:
         cur = int(
@@ -216,7 +214,6 @@ _STARTUP_CONFS: dict[str, str] = {
     # Bucketed-table warehouse for the co-located-join path
     # (tests/test_bucketing.py); kept out of the repo tree.
     "spark.sql.warehouse.dir": "/tmp/spark-graft-warehouse",
-    "spark.sql.autoBroadcastJoinThreshold": "64m",
     # PySpark records the Python call site of every F.*/Column call
     # (pyspark.errors.utils._with_origin), at ~5 Py4J round trips each
     # — most of the Python plan-building time on a short query. The
@@ -281,7 +278,6 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
         if (
             spark.conf.get(_SHUFFLE_PARTITIONS_KEY, None)
             == _SPARK_STOCK_SHUFFLE_PARTITIONS
-            != _TUNED_SHUFFLE_PARTITIONS
         ):
             spark.conf.set(_SHUFFLE_PARTITIONS_KEY, _TUNED_SHUFFLE_PARTITIONS)
     except Exception:

@@ -136,8 +136,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/gap/cumsum rewrite. Spark's session end = last event + gap.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
+    the write-once bucketed layout (``tables.load_skew_table``: 50→18
     exchanges across the 8 skew-family keys at sf0.1, rows equal;
     receipts tools/receipts/bucketed_skew_ab_r12.txt and
     bucketed_skew_declared_r13.txt). Semantics are flat-table

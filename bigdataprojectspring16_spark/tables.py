@@ -52,38 +52,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
-            # TIMESTAMP(NANOS) read as int64 ns (legacy.parquet.nanosAsLong):
+            # A TIMESTAMP(NANOS) file read as int64 ns (nanosAsLong):
             # truncate to µs with integer div — double division would lose
             # precision at 1e18 — matching DuckDB's ns→µs cast.
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif ts_type == "timestamp_ntz":
-            # A build without nanosAsLong support would surface the naive
-            # parquet timestamp as TIMESTAMP_NTZ; normalize to LTZ here
-            # (session TZ is pinned UTC, so the wall-clock is preserved)
-            # so every downstream null literal / union sees ONE ts type.
+            # The fixtures' naive µs column (TIMESTAMP(MICROS,
+            # isAdjustedToUTC=false)) reads as TIMESTAMP_NTZ; normalize
+            # to LTZ here (session TZ is pinned UTC, so the wall-clock is
+            # preserved) so every downstream null literal / union sees
+            # ONE ts type.
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ltz"))
     return df
 
 
-#: Session knob for the skew-family bucketed layout (VERDICT r12 #1).
-#: Default ON by measurement: the declared-plan A/B at sf0.1 shows
-#: 50→18 executed exchanges across the 8 skew-family keys with rows
-#: equal 8/8 and every wall faster
-#: (tools/receipts/bucketed_skew_ab_r12.txt — lever receipt;
-#: tools/receipts/bucketed_skew_declared_r13.txt — declared plans).
-#: Set to "0" to force the flat parquet scans (the semantics are
-#: identical either way — the oracle strings state flat-table truth).
-BUCKETED_EVENTS_ENV = "SPARK_GRAFT_BUCKETED_EVENTS"
-
-
-def bucketed_events_enabled() -> bool:
-    return os.environ.get(BUCKETED_EVENTS_ENV, "1").lower() not in (
-        "0", "false", "no"
-    )
-
-
 def load_skew_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """events/customer via the write-once bucketed layout (default ON).
+    """events/customer via the write-once bucketed layout.
 
     The skew family — the events⋈customer equi-join that funnels the
     whole stream through the hot 10% of customer keys, plus every
@@ -94,13 +78,16 @@ def load_skew_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     shuffle, paid once at write time (the 100 TB lever: at cluster
     scale the bucket count is sized to the data and the same layout
     amortizes across every downstream query; measured 50→18
-    exchanges at sf0.1, receipts above).
+    exchanges across the 8 keys at sf0.1, rows equal 8/8:
+    tools/receipts/bucketed_skew_ab_r12.txt and
+    tools/receipts/bucketed_skew_declared_r13.txt).
 
-    Falls back to the flat scan — semantically identical — when the
-    knob is off or the layout can't be built (read-only warehouse);
-    the fallback warns so a silently-degraded run is visible.
+    Falls back to the flat scan — semantically identical, the oracle
+    strings state flat-table truth — when the layout can't be built
+    (read-only warehouse); the fallback warns so a silently-degraded
+    run is visible.
     """
-    if name not in ("events", "customer") or not bucketed_events_enabled():
+    if name not in ("events", "customer"):
         return load_table(spark, sf_dir, name)
     try:
         # Local import: sources.sinks imports from this module.
@@ -145,7 +132,7 @@ def fan_out_small_scan(df: DataFrame) -> DataFrame:
 def ts_seconds(col: Column) -> Column:
     """Epoch seconds of a timestamp column, robust to NTZ vs LTZ.
 
-    Parquet TIMESTAMP(NANOS, isAdjustedToUTC=false) reads as
+    Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) reads as
     TIMESTAMP_NTZ on Spark 4.1, which cannot cast straight to BIGINT
     (DATATYPE_MISMATCH); routing through TIMESTAMP_LTZ interprets the
     wall-clock in the session TZ (pinned UTC, session.py) — exactly

@@ -8,7 +8,10 @@ ever does (SURVEY §5.2.1).
 from __future__ import annotations
 
 import contextlib
+import glob
+import hashlib
 import os
+import shutil
 import sys
 
 import duckdb
@@ -45,6 +48,37 @@ def knob(spark, conf_key: str, value):
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
+
+
+def drop_derived_layouts(spark, sf_dir: str) -> None:
+    """Remove every layout the engine derived from ``sf_dir``: the
+    bucketed tables (``b_*_<tag>``), then each warehouse and
+    ``.tmp_partitioned`` entry carrying the dir's tag, lock files
+    included (``sources/sinks.publish_once``)."""
+    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    for t in spark.catalog.listTables():
+        if t.name.startswith("b_") and t.name.endswith(f"_{tag}"):
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    for base in (warehouse, os.path.join(repo, ".tmp_partitioned")):
+        for p in glob.glob(os.path.join(base, f"*{tag}*")):
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
+
+
+def bucketed_layout_unavailable(monkeypatch) -> None:
+    """Make the bucketed events/customer layout build raise, as a
+    read-only warehouse would, so ``tables.load_skew_table`` takes its
+    warn-and-fall-back-to-flat branch."""
+    from bigdataprojectspring16_spark.sources import sinks
+
+    def fail(spark, sf_dir):
+        raise PermissionError("read-only warehouse")
+
+    monkeypatch.setattr(sinks, "ensure_bucketed_events", fail)
 
 
 @pytest.fixture(scope="session")

@@ -1,13 +1,12 @@
 """The materialization-barrier paths must be result-identical
-(SCALING.md §CC / §K / §PR).
+(SCALING.md §CC / §PR).
 
-The shipped defaults are performance choices measured at fixture
-scale (dedup re-evaluates shared frames; PageRank checkpoints its
-loop invariants). The other paths are the documented 100 TB
-deployment paths: ``materializeShared`` on, ``barrierMode=durable``,
-and the decade-regime PageRank plan. Without these tests those paths
-have no regression guard — the parity suite only ever runs the
-defaults.
+The fixture-scale plans are performance choices measured there (the
+CC fixpoint and PageRank checkpoint their loop frames locally). The
+other paths are the documented 100 TB deployment paths:
+``barrierMode=durable`` and the decade-regime PageRank plan. Without
+these tests those paths have no regression guard — the parity suite
+only ever runs the fixture plans.
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ import re
 import pytest
 
 from bigdataprojectspring16_spark import QUERIES
-from bigdataprojectspring16_spark.llmops import dedup
 from bigdataprojectspring16_spark.plans import barriers
 
 from .conftest import SF_SMALL as SF_DIR
@@ -29,46 +27,27 @@ def _rows(spark, key):
     return sorted(tuple(r) for r in QUERIES[key](spark, SF_DIR).collect())
 
 
-@pytest.mark.parametrize(
-    "key",
-    ["dedup_minhash_lsh", "dedup_threshold_sweep", "dedup_near_jaccard"],
-)
-def test_materialize_shared_both_settings_identical(spark, key):
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, False):
-        base = _rows(spark, key)
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
-        alt = _rows(spark, key)
-    assert base == alt
-
-
 # --- barrier MECHANISM modes (plans/barriers.py) --------------------
 #
 # The barrier mode decides HOW each barrier materializes (local
 # localCheckpoint vs durable checkpoint() — the cluster
 # fault-tolerance path). Every mode must be result-identical on keys
-# that exercise every barrier site: the CC fixpoint loop, the
-# PageRank loop invariants, and (with materializeShared forced on)
-# the dedup shared frames.  (A replicated-persist mode was measured
+# that exercise every barrier site: the CC fixpoint loop and the
+# PageRank loop invariants.  (A replicated-persist mode was measured
 # and rejected — persist keeps lineage, and the fixpoint's plan tree
 # grows exponentially with rounds; see plans/barriers.py docstring.)
 
-_BARRIER_KEYS = [
-    "graph_connected_components",
-    "graph_pagerank_rounds",
-    "dedup_minhash_lsh",
-    "dedup_near_jaccard",
-]
+_BARRIER_KEYS = ["graph_connected_components", "graph_pagerank_rounds"]
 
 
 @pytest.mark.parametrize("mode", [m for m in barriers._MODES if m != "local"])
 def test_barrier_modes_result_identical(spark, tmp_path, mode):
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
-        base = {k: _rows(spark, k) for k in _BARRIER_KEYS}
-        if mode == "durable":
-            spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        with knob(spark, barriers.BARRIER_MODE_CONF, mode):
-            for k in _BARRIER_KEYS:
-                assert _rows(spark, k) == base[k], (mode, k)
+    base = {k: _rows(spark, k) for k in _BARRIER_KEYS}
+    if mode == "durable":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    with knob(spark, barriers.BARRIER_MODE_CONF, mode):
+        for k in _BARRIER_KEYS:
+            assert _rows(spark, k) == base[k], (mode, k)
 
 
 def test_barrier_mode_rejects_unknown_value(spark):

@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 from bigdataprojectspring16_spark.sources.sinks import write_bucketed_table
 from bigdataprojectspring16_spark.tables import load_table
 
+from .conftest import bucketed_layout_unavailable, drop_derived_layouts
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -94,10 +96,6 @@ FAMILIES = {"bucketed": ("lineitem", "l_orderkey"), "path": ("orders", "o_orderk
 def fx(spark, tmp_path):
     """orders + lineitem copied into a tmp fixture dir; afterwards the
     tables, layouts and lock files derived from it are removed."""
-    import glob
-    import hashlib
-    import os
-    import pathlib
     import shutil
 
     fx = tmp_path / "fx"
@@ -105,17 +103,7 @@ def fx(spark, tmp_path):
     for t in ("orders", "lineitem"):
         shutil.copy(f"{SF_DIR}/{t}.parquet", fx / f"{t}.parquet")
     yield fx
-    tag = hashlib.sha1(os.path.abspath(fx).encode()).hexdigest()[:12]
-    for t in ("orders", "lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS b_{t}_{tag}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    for base in (warehouse, repo / ".tmp_partitioned"):
-        for p in glob.glob(os.path.join(base, f"*{tag}*")):
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            else:
-                os.remove(p)
+    drop_derived_layouts(spark, str(fx))
 
 
 def _publish(spark, family, fx):
@@ -264,29 +252,26 @@ def test_ensure_bucketed_pair_vanished_source_fails_loud(spark, fx, family):
 
 
 def test_load_skew_table_knob_off_is_flat(spark, monkeypatch):
-    """With SPARK_GRAFT_BUCKETED_EVENTS=0 the skew loader is exactly
-    the flat loader — same rows, and the plan scans the source
-    parquet, not a catalog table."""
+    """When the bucketed layout cannot be built, the skew loader warns
+    and is exactly the flat loader: the plan scans the source parquet,
+    and the rows equal the bucketed path's."""
     from bigdataprojectspring16_spark.tables import load_skew_table
 
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "0")
-    flat = load_table(spark, SF_DIR, "events")
-    got = load_skew_table(spark, SF_DIR, "events")
+    buck = sorted(map(tuple, load_skew_table(spark, SF_DIR, "events").collect()))
+    bucketed_layout_unavailable(monkeypatch)
+    with pytest.warns(UserWarning, match="falling back to flat parquet scans"):
+        got = load_skew_table(spark, SF_DIR, "events")
     assert any("events.parquet" in f for f in got.inputFiles()), (
-        "knob-off skew load must scan the source parquet"
+        "fallback skew load must scan the source parquet"
     )
-    assert sorted(map(tuple, flat.collect())) == sorted(
-        map(tuple, got.collect())
-    )
+    assert sorted(map(tuple, got.collect())) == buck
 
 
-def test_load_skew_table_rows_equal_flat(spark, monkeypatch):
-    """Default (knob on): the bucketed layout holds byte-identical
-    data for both skew tables — the layout is a physical detour the
-    semantics never see."""
+def test_load_skew_table_rows_equal_flat(spark):
+    """The bucketed layout holds byte-identical data for both skew
+    tables — the layout is a physical detour the semantics never see."""
     from bigdataprojectspring16_spark.tables import load_skew_table
 
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_EVENTS", raising=False)
     for name in ("events", "customer"):
         flat = sorted(map(tuple, load_table(spark, SF_DIR, name).collect()))
         buck = sorted(
@@ -295,14 +280,13 @@ def test_load_skew_table_rows_equal_flat(spark, monkeypatch):
         assert flat == buck, f"bucketed {name} rows differ from flat"
 
 
-def test_skew_key_plan_rides_buckets(spark, monkeypatch):
+def test_skew_key_plan_rides_buckets(spark):
     """sessionize_gap_batch keys every window on user_id; under the
     bucketed layout the executed plan must contain NO hash-partition
     exchange — the write-time bucketing is the shuffle (the sf0.1
     receipt measured 2→0 exchanges for this key)."""
     from bigdataprojectspring16_spark import QUERIES
 
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_EVENTS", raising=False)
     df = QUERIES["sessionize_gap_batch"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -310,14 +294,15 @@ def test_skew_key_plan_rides_buckets(spark, monkeypatch):
 
 
 def test_skew_key_rows_equal_across_knob(spark, monkeypatch):
-    """The skewed events⋈customer join returns identical rows with
-    the layout on and off (the declared-plan A/B contract, pinned at
-    fixture scale; sf0.1 receipt bucketed_skew_declared_r13.txt)."""
+    """The skewed events⋈customer join returns identical rows from the
+    bucketed layout and from the flat fallback (the declared-plan A/B
+    contract, pinned at fixture scale; sf0.1 receipt
+    bucketed_skew_declared_r13.txt)."""
     from bigdataprojectspring16_spark import QUERIES
 
     key = QUERIES["join_skew_events_customers"]
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "0")
-    flat = sorted(map(tuple, key(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "1")
     buck = sorted(map(tuple, key(spark, SF_DIR).collect()))
+    bucketed_layout_unavailable(monkeypatch)
+    with pytest.warns(UserWarning, match="falling back to flat parquet scans"):
+        flat = sorted(map(tuple, key(spark, SF_DIR).collect()))
     assert flat == buck

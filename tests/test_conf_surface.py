@@ -1,12 +1,15 @@
-"""The engine's own session confs are exactly three, each with a
-measured or documented purpose (SCALING.md "Barrier mechanism modes"):
+"""The engine's own settings are one session conf and two deployment
+environment variables, each with a measured or documented purpose
+(SCALING.md "Barrier mechanism modes"):
 
 - ``barrierMode`` — ``local`` | ``durable`` (the cluster
   fault-tolerance path);
-- ``materializeShared`` — the 100 TB dedup barrier flip;
-- ``verifyTokenCodes`` — ``on`` | ``off`` (the string-form reference).
+- ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` — the local
+  session's core count and driver heap (``session.get_session``).
 
-Adding a knob means editing this test.
+Every other choice follows what the code can observe (input bytes,
+``plans.barriers.decade_regime``). Adding a conf or an environment
+variable means editing this test.
 """
 
 from __future__ import annotations
@@ -16,13 +19,16 @@ import re
 
 import pytest
 
-from bigdataprojectspring16_spark.llmops import dedup
 from bigdataprojectspring16_spark.plans import barriers
 
 from .conftest import knob
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "bigdataprojectspring16_spark"
 KEY = re.compile(r"spark\.bigdataprojectspring16\.(\w+)")
+ENV = re.compile(
+    r"""(?:environ\.get|getenv)\(\s*["'](\w+)["']|environ\[\s*["'](\w+)["']\s*\]"""
+)
 
 
 def named_confs() -> set[str]:
@@ -32,21 +38,26 @@ def named_confs() -> set[str]:
     return {k for f in files for k in KEY.findall(f.read_text())}
 
 
-def test_conf_surface_is_pinned():
-    assert named_confs() == {
-        "barrierMode",
-        "materializeShared",
-        "verifyTokenCodes",
+def package_env_vars() -> set[str]:
+    return {
+        a or b
+        for f in sorted(PACKAGE.rglob("*.py"))
+        for a, b in ENV.findall(f.read_text())
     }
+
+
+def test_conf_surface_is_pinned():
+    assert named_confs() == {"barrierMode"}
+
+
+def test_env_surface_is_pinned():
+    assert package_env_vars() == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM"}
 
 
 @pytest.mark.parametrize(
     "conf, value, read",
-    [
-        (barriers.BARRIER_MODE_CONF, "eager", barriers.barrier_mode),
-        (dedup.VERIFY_TOKEN_CODES_CONF, "auto", dedup.verify_token_codes),
-    ],
-    ids=["barrierMode=eager", "verifyTokenCodes=auto"],
+    [(barriers.BARRIER_MODE_CONF, "eager", barriers.barrier_mode)],
+    ids=["barrierMode=eager"],
 )
 def test_removed_conf_values_raise(spark, conf, value, read):
     with knob(spark, conf, value):

@@ -20,6 +20,8 @@ import pytest
 from bigdataprojectspring16_spark import QUERIES
 from bigdataprojectspring16_spark.tables import TABLE_NAMES, load_table
 
+from .conftest import drop_derived_layouts
+
 SRC_SF = "/root/testdata/sf0.001"
 
 
@@ -32,6 +34,7 @@ def empty_sf_dir(spark):
             f"{d}/{name}.parquet"
         )
     yield d
+    drop_derived_layouts(spark, d)
     shutil.rmtree(d, ignore_errors=True)
 
 

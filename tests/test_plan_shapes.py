@@ -19,6 +19,8 @@ from bigdataprojectspring16_spark import QUERIES
 from bigdataprojectspring16_spark.operators import joins, scans, sorts
 from bigdataprojectspring16_spark.tables import load_table
 
+from .conftest import bucketed_layout_unavailable
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -145,14 +147,16 @@ def test_sessionize_single_shuffle(spark, monkeypatch):
     """Both windows and the final aggregate ride ONE user_id hash
     partitioning: lag-window partitioning (user_id) satisfies the
     grouping distribution of (user_id, session_no). Since r13 the
-    DEFAULT plan reads the bucketed events layout, where even that
-    one exchange disappears — the write-time bucketing IS the
-    user_id partitioning; the flat arm (knob off) keeps the original
-    single-shuffle contract."""
+    plan reads the bucketed events layout, where even that one
+    exchange disappears — the write-time bucketing IS the user_id
+    partitioning; the flat fallback (layout unavailable) keeps the
+    original single-shuffle contract."""
     from bigdataprojectspring16_spark.operators import analytics
 
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "0")
-    plan = _physical(analytics.sessionize_gap_batch(spark, SF_DIR))
+    with monkeypatch.context() as m:
+        bucketed_layout_unavailable(m)
+        with pytest.warns(UserWarning, match="falling back"):
+            plan = _physical(analytics.sessionize_gap_batch(spark, SF_DIR))
     # Bound above AND anchor below (ADVICE r3 + r4): the bad shapes
     # are a SECOND exchange (one per window / one for the aggregate)
     # and a degenerate ZERO-exchange plan (e.g. a planner change
@@ -161,9 +165,8 @@ def test_sessionize_single_shuffle(spark, monkeypatch):
     assert plan.count("Exchange hashpartitioning") <= 1
     assert "hashpartitioning(user_id" in plan
 
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "1")
     plan = _physical(analytics.sessionize_gap_batch(spark, SF_DIR))
-    # Bucketed default: zero exchanges — the scan itself provides the
+    # Bucketed: zero exchanges — the scan itself provides the
     # user_id clustering (tests/test_bucketing.py pins rows-equal).
     assert "Exchange hashpartitioning" not in plan
     assert "Bucketed: true" in plan

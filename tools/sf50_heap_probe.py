@@ -16,11 +16,14 @@ unified-memory pool. On failure the failing stage and the first
 task-failure reason are printed; the run is adjudicated by comparing
 the failing stage's per-task arithmetic against the pool size.
 
-Arms are selected by env (the probe itself is arm-agnostic):
-  SPARK_GRAFT_DRIVER_MEM=8g                      # heap under test
-  SPARK_GRAFT_SHUFFLE_PARTITIONS=4096            # width experiment
+Arms (the probe itself is arm-agnostic):
+  SPARK_GRAFT_DRIVER_MEM=8g     # heap under test (env)
+  an optional width argument    # width experiment: Spark's own
+                                # spark.sql.shuffle.partitions, set with
+                                # the injected startup confs; a value
+                                # other than 200/32 is never autosized
 
-Run:  SPARK_GRAFT_DRIVER_MEM=8g python tools/sf50_heap_probe.py
+Run:  SPARK_GRAFT_DRIVER_MEM=8g python tools/sf50_heap_probe.py [4096]
 """
 
 import json
@@ -42,8 +45,10 @@ def main() -> int:
 
     # Event logging is a startup-only conf: inject it before the tool
     # builds its session (tool-local; never part of the product confs).
+    width_arm = {"spark.sql.shuffle.partitions": sys.argv[1]} if sys.argv[1:] else {}
     session._STARTUP_CONFS = {
         **session._STARTUP_CONFS,
+        **width_arm,
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": f"file://{EVLOG_DIR}",
         # Single plain-JSON file: no zstandard module in this env,
