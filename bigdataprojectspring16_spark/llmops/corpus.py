@@ -535,11 +535,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify join.  The oracle states the all-pairs form; the declared
     plan is the keyed prefix equi-join (nested-loop-free).
     """
-    from .dedup import (
-        coded_sets,
-        contract_identical_sets,
-        prefix_filter_candidates,
-    )
+    from .dedup import contract_identical_sets, prefix_jaccard_pairs
 
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
@@ -547,30 +543,16 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.array_distinct(F.split("text", " "))).alias("toks"),
     )
     reps, members = contract_identical_sets(t)
-    # Whole-pipeline token coding (dedup.coded_sets):
-    # the sweep's postings, prefix self-join and exact-verify all
-    # shuffle 8-byte codes; recall 1.0 under any global token order.
-    reps = coded_sets(reps, "toks")
     sizes = members.groupBy("rep_id").agg(F.count(F.lit(1)).alias("g"))
     intra = sizes.agg(
         F.sum(F.col("g") * (F.col("g") - 1) / 2).cast("long").alias("n_pairs")
     ).select(F.lit("0.95-1.00").alias("band"), "n_pairs")
 
-    cand = prefix_filter_candidates(reps, 0.7)
-    ta = reps.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = reps.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
     ga = sizes.select(F.col("rep_id").alias("doc_a"), F.col("g").alias("g_a"))
     gb = sizes.select(F.col("rep_id").alias("doc_b"), F.col("g").alias("g_b"))
     verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("j"),
-        )
+        prefix_jaccard_pairs(reps, 0.7)
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("j"))
         .where(F.col("j") >= 0.7)
         .join(ga, "doc_a")
         .join(gb, "doc_b")

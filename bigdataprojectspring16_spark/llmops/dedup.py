@@ -11,11 +11,16 @@ result is bit-identical to the O(n²) oracle while the plan stays a
 linear chain of keyed shuffles.  The probabilistic twins
 (``dedup_minhash_lsh``, ``dedup_simhash``) keep their band joins and
 are recall-tested in tests/test_scale_paths.py.
+
+Every set-similarity key in the package verifies its candidates
+through ONE function, :func:`exact_jaccard`, and every prefix-filter
+key reaches it through :func:`prefix_jaccard_pairs` (code the sets →
+candidates → verify) — the one place to prune or re-code the verify.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.barriers import decade_regime
@@ -33,13 +38,15 @@ from ..tables import load_table
 #: subtrees re-evaluate; materialize a subtree that contains a large
 #: shuffle (PageRank's edge build, llmops/graph.py).
 #:
-#: Every set column is coded as xxhash64 BIGINTs before candidate
-#: generation and verify (SCALING.md §SF100): Jaccard is a function of
-#: the token SET, and |intersect| / |union| survive the coding unless
-#: two DISTINCT tokens inside one pair's union collide in 64 bits —
-#: P < n²/2⁶⁵ ≈ 1e-15 per pair at ~150-token sets. The shuffles then
-#: carry 8-byte codes instead of ~15 B strings (sf30/sf50 fit local
-#: scratch only coded, tools/receipts/verify_codes_ab_r12.txt).
+#: Every set column is coded as xxhash64 BIGINTs by :func:`coded_sets`
+#: (SCALING.md §SF100) — before candidate generation on the prefix-
+#: filter path, before the verify alone on the minhash path. Jaccard
+#: is a function of the token SET, and |intersect| / |union| survive
+#: the coding unless two DISTINCT tokens inside one pair's union
+#: collide in 64 bits — P < n²/2⁶⁵ ≈ 1e-15 per pair at ~150-token
+#: sets. The shuffles then carry 8-byte codes instead of ~15 B strings
+#: (sf30/sf50 fit local scratch only coded,
+#: tools/receipts/verify_codes_ab_r12.txt).
 
 #: The near-dup Jaccard threshold every pairwise key verifies at.
 #: Code sites import this; the ORACLE SQL strings and docstrings
@@ -50,37 +57,40 @@ from ..tables import load_table
 NEAR_DUP_JACCARD = 0.95
 
 
-def coded_verify_side(t: DataFrame, set_col: str, alias: str) -> DataFrame:
-    """One side of an exact-verify join: ``(doc_id, <alias>)`` where
-    ``<alias>`` is the set column as xxhash64 BIGINT codes.
-
-    The projection sits ABOVE the contracted rep frame and
-    BELOW the verify join's exchange, so the hashing runs map-side
-    and the shuffle carries the 8-byte codes. array_intersect /
-    array_union treat their inputs as sets (results are distinct), so
-    size ratios — and therefore the rounded Jaccard — are identical
-    to the string form absent a 64-bit collision inside one pair's
-    union."""
-    col = F.transform(set_col, lambda x: F.xxhash64(x))
-    return t.select("doc_id", col.alias(alias))
-
-
 def coded_sets(t: DataFrame, set_col: str) -> DataFrame:
-    """Replace a set column's string elements with xxhash64 codes BEFORE
-    candidate generation — so the fact-sized posting explode, the
-    document-frequency aggregation, the prefix self-join, AND the
+    """Replace a set column's string elements with xxhash64 codes — the
+    package's one coding function. Applied BEFORE candidate generation
+    by :func:`prefix_jaccard_pairs`, so the fact-sized posting explode,
+    the document-frequency aggregation, the prefix self-join, AND the
     exact-verify all shuffle 8-byte codes instead of ~15 B strings.
 
-    Valid ONLY for the prefix-filter family: its recall-1.0 guarantee
-    holds under ANY global token order (the AllPairs pigeonhole needs
-    a total order, not a specific one), so re-basing the (df, term)
-    order onto (df, code) — and even merging the rare colliding
-    term pair into one posting key — can only grow the candidate
-    superset, never drop a true pair; the exact verify then yields
-    the identical final result. NOT applied to the minhash path:
-    its signatures are functions of the token STRINGS, and re-basing
-    them would re-roll the banding's per-copy recall."""
+    Candidate generation on codes is valid ONLY for the prefix-filter
+    family: its recall-1.0 guarantee holds under ANY global token
+    order (the AllPairs pigeonhole needs a total order, not a specific
+    one), so re-basing the (df, term) order onto (df, code) — and even
+    merging the rare colliding term pair into one posting key — can
+    only grow the candidate superset, never drop a true pair; the
+    exact verify then yields the identical final result. The minhash
+    path codes its verify side only: its signatures are functions of
+    the token STRINGS, and re-basing them would re-roll the banding's
+    per-copy recall."""
     return t.withColumn(set_col, F.transform(set_col, lambda x: F.xxhash64(x)))
+
+
+def five_gram_set() -> Column:
+    """The distinct character 5-grams of ``text``, as the ngram and
+    edit-distance oracles' ``list_distinct(list_transform(
+    generate_series(1, length(text) - 4), ...))`` — EMPTY for texts
+    shorter than 5 characters, where Spark's ``sequence(1, n)`` would
+    descend and emit phantom grams."""
+    return F.array_distinct(
+        F.expr(
+            "CASE WHEN length(text) >= 5 THEN"
+            " transform(sequence(1, length(text) - 4),"
+            "           i -> substring(text, i, 5))"
+            " ELSE CAST(array() AS array<string>) END"
+        )
+    )
 
 
 def contract_identical_sets(t: DataFrame, set_col: str = "toks"):
@@ -314,6 +324,61 @@ def prefix_filter_candidates(
     )
 
 
+def exact_jaccard(
+    t: DataFrame,
+    cand: DataFrame,
+    set_col: str = "toks",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact set-Jaccard verify: ``cand(doc_a, doc_b)`` joined to
+    both sides of ``t(doc_id, set_col, *carry)``.
+
+    Returns ``(doc_a, doc_b, <c>_a, <c>_b for c in carry, jaccard)``
+    with the UNROUNDED ``|a ∩ b| / |a ∪ b|`` (array_intersect /
+    array_union treat their inputs as sets). It does not filter: each
+    caller applies the predicate its oracle states — ``round(jaccard,
+    6) >= t`` for the pair keys, raw ``jaccard >= t`` for the graph
+    edges and the edit-distance candidates.
+    """
+
+    def side(s: str) -> DataFrame:
+        return t.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            F.col(set_col).alias(f"{set_col}_{s}"),
+        )
+
+    a, b = F.col(f"{set_col}_a"), F.col(f"{set_col}_b")
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            *[f"{c}_{s}" for c in carry for s in "ab"],
+            (inter.cast("double") / union).alias("jaccard"),
+        )
+    )
+
+
+def prefix_jaccard_pairs(
+    t: DataFrame,
+    threshold: float,
+    set_col: str = "toks",
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every pair of ``t(doc_id, set_col, *carry)`` that may reach
+    Jaccard ``threshold``, exact-verified: :func:`coded_sets` →
+    :func:`prefix_filter_candidates` → :func:`exact_jaccard`. The
+    output is :func:`exact_jaccard`'s, unfiltered; the candidates are
+    a superset of the pairs with ``round(J, 6) >= threshold``."""
+    t = coded_sets(t, set_col)
+    cand = prefix_filter_candidates(t, threshold, set_col)
+    return exact_jaccard(t, cand, set_col, carry)
+
+
 @query(
     "dedup_exact_docs",
     oracle="""
@@ -364,10 +429,10 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs: token-set Jaccard ≥ 0.95, exact result.
 
-    Candidates come from :func:`prefix_filter_candidates` (lossless
-    prefix-filter equi-join — recall 1.0 by the prefix pigeonhole
-    argument, see its docstring), then the exact Jaccard is computed
-    on candidates only.  Identical output to the oracle's all-pairs
+    Pairs come from :func:`prefix_jaccard_pairs`: the lossless
+    prefix-filter equi-join (recall 1.0 by the prefix pigeonhole
+    argument, see :func:`prefix_filter_candidates`), then the exact
+    Jaccard on candidates only.  Identical output to the oracle's all-pairs
     CTE with a linear plan: no nested-loop join anywhere
     (tests/test_plan_shapes.py asserts the physical plan).
     """
@@ -380,23 +445,9 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (including the contracted corpus's df order) — so the quadratic
     # phases run on one representative per distinct token set.
     t, m = contract_identical_sets(full)
-    # Whole-pipeline token coding (default ON — coded_sets docstring):
-    # postings, df agg, prefix self-join and exact-verify all shuffle
-    # 8-byte codes; recall 1.0 holds under any global token order.
-    t = coded_sets(t, "toks")
-    cand = prefix_filter_candidates(t, NEAR_DUP_JACCARD)
-    ta = t.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = t.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
     rep_pairs = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        prefix_jaccard_pairs(t, NEAR_DUP_JACCARD)
+        .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
     return expand_rep_pairs(rep_pairs, m)
@@ -409,7 +460,9 @@ def _minhash_contraction(spark: SparkSession, sf_dir: str):
     seventh scale point — can drive the pipeline phase-at-a-time with
     parquet persistence between phase-isolated sessions;
     ``dedup_minhash_lsh`` is exactly these ``_minhash_*`` helpers
-    chained, so the declared plan is unchanged by the split."""
+    chained, so the declared plan is unchanged by the split. The
+    tool persists :func:`coded_sets` of this frame and verifies each
+    pair shard with the same :func:`exact_jaccard` as phase 4."""
     d = load_table(spark, sf_dir, "documents")
     full = d.select(
         "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
@@ -511,26 +564,11 @@ def _minhash_candidate_pairs(spark: SparkSession, bands: DataFrame) -> DataFrame
 
 def _minhash_verify_pairs(t: DataFrame, cand: DataFrame) -> DataFrame:
     """Phase 4: exact token-set Jaccard on the candidates, coded
-    map-side (xxhash64, see the module's coding note), threshold 0.95."""
-    # Verify sides carry xxhash64 codes instead of token strings —
-    # the 2-4x verify-shuffle cut that brings the sf30 sweep inside
-    # local scratch (SCALING.md §SF100).
-    ta = coded_verify_side(t, "toks", "toks_a").withColumnRenamed(
-        "doc_id", "doc_a"
-    )
-    tb = coded_verify_side(t, "toks", "toks_b").withColumnRenamed(
-        "doc_id", "doc_b"
-    )
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
+    map-side (xxhash64, see the module's coding note), threshold 0.95.
+    The bands above stay on the token strings (coded_sets docstring)."""
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        exact_jaccard(coded_sets(t, "toks"), cand)
+        .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
 
@@ -801,31 +839,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle, linear plan.
     """
     d = load_table(spark, sf_dir, "documents")
-    grams = F.array_distinct(
-        F.expr(
-            "CASE WHEN length(text) >= 5 THEN"
-            " transform(sequence(1, length(text) - 4),"
-            "           i -> substring(text, i, 5))"
-            " ELSE CAST(array() AS array<string>) END"
-        )
-    )
-    t_full = d.select("doc_id", grams.alias("grams"))
+    t_full = d.select("doc_id", five_gram_set().alias("grams"))
     t, m = contract_identical_sets(t_full, set_col="grams")
-    # Whole-pipeline gram coding (default ON — coded_sets docstring).
-    t = coded_sets(t, "grams")
-    cand = prefix_filter_candidates(t, 0.9, set_col="grams")
-    ta = t.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("grams_a"))
-    tb = t.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("grams_b"))
-    inter = F.size(F.array_intersect(F.col("grams_a"), F.col("grams_b")))
-    union = F.size(F.array_union(F.col("grams_a"), F.col("grams_b")))
     rep_pairs = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        prefix_jaccard_pairs(t, 0.9, "grams")
+        .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= 0.9)
     )
     return expand_rep_pairs(rep_pairs, m)
@@ -891,54 +909,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = NEAR_DUP_JACCARD,
-    num_hash_tables: int = 32,
-) -> DataFrame:
-    """Scale path: MinHashLSH approximate Jaccard-similarity join.
-
-    shingle(token set → binary vocab vector) → minhash (32 tables) →
-    LSH bucket-join. Linear in corpus size instead of O(n²): the
-    candidate-pair join only touches colliding buckets. Returns the
-    same (doc_a, doc_b, jaccard) shape as ``dedup_near_jaccard`` with
-    the *exact* Jaccard recomputed on candidates (LSH proposes,
-    exact verifies — standard at 100 TB since verification cost is
-    proportional to candidates, not pairs).
-    """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
-
-    d = load_table(spark, sf_dir, "documents")
-    t = d.select(
-        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
-    )
-    cv = CountVectorizer(inputCol="toks", outputCol="features", binary=True)
-    model = cv.fit(t)
-    feats = model.transform(t)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
-    )
-    mh_model = mh.fit(feats)
-    # approxSimilarityJoin's distCol is Jaccard *distance* (1 - sim).
-    pairs = mh_model.approxSimilarityJoin(
-        feats, feats, 1.0 - threshold, distCol="jaccard_dist"
-    )
-    cand = pairs.select(
-        F.col("datasetA.doc_id").alias("doc_a"),
-        F.col("datasetB.doc_id").alias("doc_b"),
-        F.col("datasetA.toks").alias("toks_a"),
-        F.col("datasetB.toks").alias("toks_b"),
-    ).where(F.col("doc_a") < F.col("doc_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
-    return cand.select(
-        "doc_a",
-        "doc_b",
-        F.round(inter.cast("double") / union, 6).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
-
-
 @query(
     "dedup_edit_distance",
     oracle="""
@@ -977,45 +947,21 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is a keyed shuffle — no nested-loop join in the plan.
     """
     d = load_table(spark, sf_dir, "documents")
-    grams = F.array_distinct(
-        F.expr(
-            "CASE WHEN length(text) >= 5 THEN"
-            " transform(sequence(1, length(text) - 4),"
-            "           i -> substring(text, i, 5))"
-            " ELSE CAST(array() AS array<string>) END"
-        )
-    )
-    # Whole-pipeline gram coding (default ON — coded_sets docstring);
-    # the gram arrays dominate every shuffle (text ships once, grams
-    # are ~len(text) 5-char strings each); the levenshtein runs on
-    # the untouched text columns.
-    t = coded_sets(
-        d.select("doc_id", "text", grams.alias("grams")), "grams"
-    )
-    cand = prefix_filter_candidates(t, 0.9, set_col="grams")
-    ta = t.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("text").alias("ta"),
-        F.col("grams").alias("grams_a"),
-    )
-    tb = t.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("text").alias("tb"),
-        F.col("grams").alias("grams_b"),
-    )
-    inter = F.size(F.array_intersect(F.col("grams_a"), F.col("grams_b")))
-    union = F.size(F.array_union(F.col("grams_a"), F.col("grams_b")))
-    lev = F.levenshtein(F.col("ta"), F.col("tb"))
+    t = d.select("doc_id", "text", five_gram_set().alias("grams"))
+    # The gram arrays dominate every shuffle and ship coded
+    # (prefix_jaccard_pairs); the levenshtein runs on the carried text.
+    lev = F.levenshtein(F.col("text_a"), F.col("text_b"))
     return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .where(inter.cast("double") / union >= 0.9)
+        prefix_jaccard_pairs(t, 0.9, "grams", carry=("text",))
+        .where(F.col("jaccard") >= 0.9)
         .select(
             "doc_a",
             "doc_b",
             lev.alias("edit_dist"),
             F.round(
-                lev / F.greatest(F.length("ta"), F.length("tb")).cast("double"), 6
+                lev
+                / F.greatest(F.length("text_a"), F.length("text_b")).cast("double"),
+                6,
             ).alias("rel_dist"),
         )
     )

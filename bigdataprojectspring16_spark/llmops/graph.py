@@ -23,15 +23,18 @@ after every round truncates the lineage so the plan stays O(1) deep
 instead of O(rounds).
 
 Edge generation is linear too: candidates come from the lossless
-prefix-filter equi-join (dedup.prefix_filter_candidates — recall 1.0
-for Jaccard ≥ t, never all-pairs), exact-verified before entering the
-fixpoint. The DuckDB oracle expresses the identical closure as a WITH
-RECURSIVE reachability query — a differential check that the
-star-contraction computes true transitive closure, not one-hop
-grouping.
+prefix-filter equi-join (dedup.prefix_jaccard_pairs — recall 1.0
+for Jaccard ≥ t, never all-pairs), exact-verified on xxhash64-coded
+token sets before entering the fixpoint. The DuckDB oracle expresses
+the identical closure as a WITH RECURSIVE reachability query — a
+differential check that the star-contraction computes true
+transitive closure, not one-hop grouping.
 """
 
 from __future__ import annotations
+
+import time
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,6 +44,11 @@ from ..registry import query
 from ..tables import load_table
 
 MAX_ITERATIONS = 25
+
+#: Longest wait, in seconds, for a round's observed row count once its
+#: write has returned. The metric is normally there already; past this
+#: bound the round is counted by a second job instead of blocking.
+OBSERVATION_WAIT_S = 60.0
 
 #: Columns the label pipeline creates or reads internally; a ``carry``
 #: column with one of these names would shadow them.
@@ -63,7 +71,7 @@ def _near_dup_edges(d: DataFrame, threshold: float = 0.95) -> DataFrame:
     this contraction is the difference between verifying |distinct|²
     -shaped candidates and |docs|²-shaped ones. Cross-set candidates
     come from the lossless prefix-filter join (recall 1.0 — see
-    dedup.prefix_filter_candidates), exact-verified on arrays; the
+    dedup.prefix_jaccard_pairs), exact-verified on coded arrays; the
     resulting closure is identical to ``dedup_near_jaccard``'s pair
     predicate because any member pair (a, b) of set-groups (A, B) has
     the same Jaccard as the rep pair.
@@ -93,7 +101,7 @@ def _near_dup_edge_parts(
     leaves every plan byte-identical to the r13 shape. A ``carry``
     name that collides with an internal column raises ``ValueError``.
     """
-    from .dedup import prefix_filter_candidates
+    from .dedup import prefix_jaccard_pairs
 
     clash = sorted(set(carry) & set(_RESERVED_CARRY))
     if clash:
@@ -130,15 +138,10 @@ def _near_dup_edge_parts(
     rt = t.join(
         rep_ids.select(F.col("rep").alias("doc_id")), "doc_id", "semi"
     ).select("doc_id", "toks")
-    cand = prefix_filter_candidates(rt, threshold)
-    ta = rt.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = rt.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
+    # The oracle's edge predicate is the RAW ratio (no rounding).
     rep_edges = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .where(inter.cast("double") / union >= threshold)
+        prefix_jaccard_pairs(rt, threshold)
+        .where(F.col("jaccard") >= threshold)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     rep_nodes = rep_ids.select(F.col("rep").alias("node"), *carry)
@@ -267,6 +270,11 @@ def _count_materialize(df: DataFrame) -> int:
     r4-r13 signature aggregate paid a partial-agg job plus a
     single-partition final job per round. Measured (r14): 5 jobs per
     star round -> 4 (SCALING.md §CC).
+
+    ``Observation.get`` waits without a limit, so the wait is bounded
+    by :data:`OBSERVATION_WAIT_S`; an observation that has not
+    completed by then is counted by ``df.count()`` (one more job on
+    the already materialized frame) with a warning.
     """
     from pyspark.sql import Observation
 
@@ -277,7 +285,27 @@ def _count_materialize(df: DataFrame) -> int:
         .mode("overwrite")
         .save()
     )
-    return int(obs.get["n"])
+    if _observation_ready(obs, OBSERVATION_WAIT_S):
+        return int(obs.get["n"])
+    warnings.warn(
+        f"row-count observation not published within "
+        f"{OBSERVATION_WAIT_S:g} s; counting with a separate job",
+        stacklevel=2,
+    )
+    return df.count()
+
+
+def _observation_ready(obs, timeout_s: float) -> bool:
+    """True once ``obs``'s metrics are published, False if that has
+    not happened within ``timeout_s`` (polls the JVM observation's
+    public ``future()``)."""
+    fut = obs._jo.future()
+    deadline = time.monotonic() + timeout_s
+    while not fut.isCompleted():
+        if time.monotonic() >= deadline:
+            return False
+        time.sleep(0.005)
+    return True
 
 
 def _is_star_forest(e: DataFrame) -> bool:

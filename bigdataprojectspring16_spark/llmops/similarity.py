@@ -3,9 +3,11 @@
 Embeddings are L2-normalized 64-dim float arrays (measured ‖v‖₂=1),
 so cosine ≡ dot product. Dot products run JVM-side via
 ``zip_with`` + ``aggregate`` in double precision — no Python in the
-loop. Brute force is the declared/oracle-checked baseline;
-``lsh_ann_topk`` (random-projection LSH buckets) is the scale path,
-held to recall@5 against brute force in tests/test_scale_paths.py.
+loop. Brute force is the declared/oracle-checked baseline; its
+scale paths are deterministic too, so the oracle checks them as
+well: ``sim_ann_lsh`` (random-hyperplane LSH buckets) and
+``sim_ivf_topk`` (a quantized-Lloyd IVF index), both held to recall
+and partition invariance in tests/test_scale_paths.py.
 """
 
 from __future__ import annotations
@@ -264,8 +266,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The scale path for :func:`sim_knn_cosine`, expressed with
     deterministic hyperplanes so the DuckDB oracle reproduces it
-    bit-for-bit (MLlib's ``BucketedRandomProjectionLSH`` twin with
-    seeded randomness lives in :func:`lsh_ann_topk`):
+    bit-for-bit, which MLlib's seeded ``BucketedRandomProjectionLSH``
+    could not):
 
     1. 4 pseudo-random hyperplanes: weight(j, d) = first MD5 nibble
        of ``j || ',' || d`` shifted to be symmetric around 0 — a
@@ -331,135 +333,6 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(5)
-    )
-
-
-def lsh_ann_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_ids: list[int] | None = None,
-    k: int = 5,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-) -> DataFrame:
-    """Scale path: approximate k-NN via BucketedRandomProjectionLSH.
-
-    Random-projection buckets ≈ IVF coarse quantization: candidates
-    come only from colliding buckets, then exact cosine re-ranks.
-    Compared against brute force for recall@k in
-    tests/test_scale_paths.py.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "features", array_to_vector(F.col("embedding"))
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(e)
-    queries = e.where(F.col("vec_id").isin(query_ids or [0]))
-    # Euclidean distance on unit vectors is monotone in cosine:
-    # d² = 2 - 2·cos, so nearest-by-L2 ≡ nearest-by-cosine.
-    pairs = model.approxSimilarityJoin(queries, e, 2.0, distCol="l2_dist")
-    cand = pairs.select(
-        F.col("datasetA.vec_id").alias("query_id"),
-        F.col("datasetB.vec_id").alias("vec_id"),
-        F.col("datasetA.embedding").alias("q_emb"),
-        F.col("datasetB.embedding").alias("emb"),
-    ).where(F.col("query_id") != F.col("vec_id"))
-    from pyspark.sql import Window
-
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(dot(F.col("q_emb"), F.col("emb")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def ivf_ann_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_ids: list[int] | None = None,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Scale path: IVF (inverted-file) approximate k-NN.
-
-    The second standard ANN architecture next to LSH
-    (:func:`sim_ann_lsh`): a seeded k-means coarse quantizer
-    partitions the corpus into ``n_cells`` Voronoi cells; a query
-    scores only the vectors in its ``n_probe`` nearest cells, then
-    exact cosine re-ranks. At 100 TB the cell id becomes the
-    partition key, so a probe touches n_probe/n_cells of the data.
-    Held to recall@k against brute force in tests/test_scale_paths.py.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    e = load_table(spark, sf_dir, "embeddings").withColumn(
-        "features", array_to_vector(F.col("embedding"))
-    )
-    km = KMeans(k=n_cells, seed=42, featuresCol="features", predictionCol="cell")
-    model = km.fit(e)
-    assigned = model.transform(e).select("vec_id", "embedding", "cell")
-
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
-    )
-    queries = assigned.where(F.col("vec_id").isin(query_ids or [0])).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    # rank cells per query by centroid distance, keep n_probe
-    from pyspark.sql import Window
-
-    q_cells = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "q_emb", "centroid", lambda x, y: (x.cast("double") - y) ** 2
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("dist2", "cell")
-            ),
-        )
-        .where(F.col("cell_rank") <= n_probe)
-        .select("query_id", "q_emb", "cell")
-    )
-    cand = assigned.join(q_cells, "cell").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(dot(F.col("embedding"), F.col("q_emb")), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
     )
 
 
@@ -542,8 +415,7 @@ def _ivf_cells(v: DataFrame, k: int = 8, rounds: int = 2):
     seeding, 6-decimal round-boundary quantization, and the
     (dist, cid) argmin order — the properties that make the whole IVF
     index exactly oracle-checkable, unlike MLlib ``KMeans``'s
-    seed-dependent centers, which :func:`ivf_ann_topk` keeps as the
-    engine-native variant).
+    seed-dependent centers).
 
     Returns ``(assigned, cents)``: every vector with its cell id
     (vec_id, e, cid) and the k×dim centroid frame (cid, c).

@@ -541,14 +541,15 @@ def multimodal_payload_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payload bytes never pair-join: each asset collapses to its set of
     128-bit block digests (a narrow 1:N expansion + digest collect),
     and candidates come from the SAME lossless prefix-filter
-    equi-join as the text near-dup family (recall 1.0 ≥ the 0.5
-    floor) keyed on single digests — rare blocks form the prefixes,
+    equi-join and exact verify as the text near-dup family
+    (``dedup.prefix_jaccard_pairs``, recall 1.0 ≥ the 0.5 floor),
+    keyed on single xxhash64-coded digests — rare blocks form the prefixes,
     which is what bounds posting lists on real binary corpora.  The
     oracle states the all-pairs form over the text twin
     (`sha256(text)` ≡ payload digests — fixture corpus is pure ASCII,
     same convention as `multimodal_block_dedup`).
     """
-    from ..llmops.dedup import prefix_filter_candidates
+    from ..llmops.dedup import prefix_jaccard_pairs
 
     assets = with_binary_payload(load_table(spark, sf_dir, "documents"))
     b = assets.where(F.length("payload") > 0).select(
@@ -563,28 +564,12 @@ def multimodal_payload_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("blocks"),
     )
-    cand = prefix_filter_candidates(
-        b.select("doc_id", "blocks"), 0.5, set_col="blocks"
-    )
-    ba = b.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("source").alias("src_a"),
-        F.col("blocks").alias("blocks_a"),
-    )
-    bb = b.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("source").alias("src_b"),
-        F.col("blocks").alias("blocks_b"),
-    )
-    inter = F.size(F.array_intersect(F.col("blocks_a"), F.col("blocks_b")))
-    union = F.size(F.array_union(F.col("blocks_a"), F.col("blocks_b")))
     pairs = (
-        cand.join(ba, "doc_a")
-        .join(bb, "doc_b")
+        prefix_jaccard_pairs(b, 0.5, "blocks", carry=("source",))
         .select(
-            F.least("src_a", "src_b").alias("source_a"),
-            F.greatest("src_a", "src_b").alias("source_b"),
-            F.round(inter.cast("double") / union, 6).alias("j"),
+            F.least("source_a", "source_b").alias("source_a"),
+            F.greatest("source_a", "source_b").alias("source_b"),
+            F.round("jaccard", 6).alias("j"),
         )
         .where(F.col("j") >= 0.5)
     )

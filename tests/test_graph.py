@@ -217,6 +217,28 @@ def test_cc_raises_when_fixpoint_does_not_converge(spark, monkeypatch):
         cc_with_rounds(nodes, e)
 
 
+def test_unpublished_observation_falls_back_to_count(spark, monkeypatch):
+    """A round-count observation that never completes must not block:
+    past the bounded wait each round is counted by a separate job, with
+    a warning, and labels and round counts equal the normal path's."""
+    import pytest
+
+    from bigdataprojectspring16_spark.llmops import graph
+
+    nodes = spark.range(16).select(F.col("id").alias("node"))
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "src long, dst long"
+    )
+    labels, rounds = cc_with_rounds(nodes, e)
+    normal = sorted(tuple(r) for r in labels.collect())
+
+    monkeypatch.setattr(graph, "_observation_ready", lambda obs, timeout_s: False)
+    with pytest.warns(UserWarning, match="observation not published"):
+        fb_labels, fb_rounds = cc_with_rounds(nodes, e)
+    assert fb_rounds == rounds
+    assert sorted(tuple(r) for r in fb_labels.collect()) == normal
+
+
 def test_carry_rejects_internal_column_names(spark):
     """A carry column named like an internal one would shadow it."""
     import pytest

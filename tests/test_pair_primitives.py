@@ -16,7 +16,13 @@ import math
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from bigdataprojectspring16_spark.llmops.dedup import prefix_filter_candidates
+from bigdataprojectspring16_spark.llmops.dedup import (
+    contract_identical_sets,
+    expand_rep_pairs,
+    five_gram_set,
+    prefix_filter_candidates,
+    prefix_jaccard_pairs,
+)
 from bigdataprojectspring16_spark.llmops.graph import cc_with_rounds
 
 SLOW = settings(
@@ -106,16 +112,12 @@ def test_star_contraction_matches_union_find(spark, n, edges):
 )
 @SLOW
 def test_contraction_pipeline_equals_all_pairs(spark, sets, copies, threshold):
-    """contract -> prefix-filter -> exact verify -> expand must equal
-    the brute-force all-pairs result on corpora WITH identical-set
+    """contract -> prefix_jaccard_pairs -> expand must equal the
+    brute-force all-pairs result on corpora WITH identical-set
     duplicates (the case the contraction exists for).  Hypothesis
     drives duplicate multiplicities per distinct set, so intra-group,
-    inter-group, and singleton paths are all exercised."""
-    from bigdataprojectspring16_spark.llmops.dedup import (
-        contract_identical_sets,
-        expand_rep_pairs,
-    )
-
+    inter-group, and singleton paths are all exercised.  A carried
+    column must ride with its own side of each pair."""
     # Materialize the corpus: set i repeated copies[i % len(copies)] times.
     docs = []
     for i, s in enumerate(sets):
@@ -131,37 +133,25 @@ def test_contraction_pipeline_equals_all_pairs(spark, sets, copies, threshold):
 
     t = spark.createDataFrame(docs, "doc_id long, toks array<string>")
     reps, members = contract_identical_sets(t)
-    cand = prefix_filter_candidates(reps, threshold)
-    ta = reps.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    tb = reps.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    inter = F.size(F.array_intersect(F.col("ta"), F.col("tb")))
-    union = F.size(F.array_union(F.col("ta"), F.col("tb")))
-    rep_pairs = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    tagged = reps.withColumn("tag", F.concat(F.lit("d"), F.col("doc_id")))
+    pairs = prefix_jaccard_pairs(tagged, threshold, carry=("tag",)).where(
+        F.col("jaccard") >= threshold
     )
+    for r in pairs.collect():
+        assert (r.tag_a, r.tag_b) == (f"d{r.doc_a}", f"d{r.doc_b}")
     got = {
         (r.doc_a, r.doc_b)
-        for r in expand_rep_pairs(rep_pairs, members).collect()
+        for r in expand_rep_pairs(
+            pairs.select("doc_a", "doc_b", "jaccard"), members
+        ).collect()
     }
     assert got == truth
-
 
 def test_contraction_fingerprint_separator_injective(spark):
     """Distinct sets whose tokens contain the old separator character
     must NOT be merged: {'a|b'} vs {'a','b'} collide under a raw
     '|'-join fingerprint but are distinct under the per-element-hash
     digest (round-3 review finding)."""
-    from bigdataprojectspring16_spark.llmops.dedup import (
-        contract_identical_sets,
-    )
-
     t = spark.createDataFrame(
         [(0, ["a|b"]), (1, ["a", "b"])], "doc_id long, toks array<string>"
     )
@@ -174,16 +164,8 @@ def test_short_text_grams_are_empty_not_descending(spark):
     """Texts shorter than the gram width must produce an EMPTY gram
     set on the Spark side, matching DuckDB's empty generate_series —
     Spark's sequence(1, n) DESCENDS for n < 1 and would emit phantom
-    grams (round-3 hardening)."""
-    from pyspark.sql import functions as F
-
+    grams (round-3 hardening). The builder is the one both gram keys
+    (dedup_ngram_jaccard, dedup_edit_distance) use."""
     df = spark.createDataFrame([("ab",), ("",), ("abcdef",)], "text string")
-    grams = df.select(
-        F.expr(
-            "CASE WHEN length(text) >= 5 THEN"
-            " transform(sequence(1, length(text) - 4),"
-            "           i -> substring(text, i, 5))"
-            " ELSE CAST(array() AS array<string>) END"
-        ).alias("g")
-    ).collect()
+    grams = df.select(five_gram_set().alias("g")).collect()
     assert [r.g for r in grams] == [[], [], ["abcde", "bcdef"]]

@@ -332,9 +332,6 @@ BOUND_TABLE: dict[tuple[str, str, int], tuple[int, str]] = {
         64, "IVF cell centroids — n_cells=8 declared"),
     ("llmops/similarity.py", "sim_knn_cosine", 0): (
         8, "1 declared query vector"),
-    ("llmops/similarity.py", "ivf_ann_topk", 0): (
-        64, "unexercised: KMeans-IVF helper (n_cells centroids); "
-        "pinned by tests/test_scale_paths.py"),
     ("llmops/text.py", "text_bm25_topk", 0): (
         1, "1-row corpus stats (N, avgdl)"),
     ("llmops/text.py", "text_bm25_topk", 1): (

@@ -9,16 +9,18 @@ after plan changes; the committed snapshot is regenerated per round.
     python tools/dump_plans.py [key ...]     # default: bench HEADLINE
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from plan_text import formatted_plan  # noqa: E402
 from bigdataprojectspring16_spark import QUERIES, get_session  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-OUT = "/root/repo/PLANS.md"
+OUT = os.path.join(REPO, "PLANS.md")
 
 
 def main() -> None:

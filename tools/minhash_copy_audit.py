@@ -20,7 +20,7 @@ banding result must satisfy
     the exact-verify stage).
 
 Usage:
-  AUDIT_SF_DIR=/root/repo/.bench_sf30 AUDIT_COPIES=300 \
+  AUDIT_SF_DIR=.bench_sf30 AUDIT_COPIES=300 \
       python tools/minhash_copy_audit.py [copy_id ...]
 Default sampled copies: 0, COPIES//2, COPIES-1.
 """
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from bigdataprojectspring16_spark import QUERIES, get_session  # noqa: E402
 
-BIG_DIR = os.environ.get("AUDIT_SF_DIR", "/root/repo/.bench_sf30")
+BIG_DIR = os.environ.get("AUDIT_SF_DIR", f"{REPO}/.bench_sf30")
 REF_DIR = os.environ.get("AUDIT_REF_DIR", "/root/testdata/sf0.1")
 COPIES = int(os.environ.get("AUDIT_COPIES", "300"))
 STRIDE = int(os.environ.get("AUDIT_STRIDE", "10000"))

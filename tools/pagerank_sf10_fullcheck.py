@@ -32,8 +32,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "tools")
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TOOLS)
+sys.path.insert(0, REPO)
+sys.path.insert(0, TOOLS)
 
 import duckdb  # noqa: E402
 
@@ -41,7 +43,7 @@ from bigdataprojectspring16_spark import ORACLES, QUERIES, get_session  # noqa: 
 from comparator import value_hash  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
-SF10 = os.environ.get("SF10_DIR", "/root/repo/.bench_sf10")
+SF10 = os.environ.get("SF10_DIR", f"{REPO}/.bench_sf10")
 PART_STRIDE = 100_000  # tools/make_sf10.py STRIDE["partkey"]
 COPIES = 100
 TABLES = (

@@ -69,7 +69,7 @@ def phase_construct() -> None:
         _minhash_bands_frame,
         _minhash_candidate_pairs,
         _minhash_contraction,
-        coded_verify_side,
+        coded_sets,
     )
 
     spark = _session("sf100-shard-construct")
@@ -77,9 +77,7 @@ def phase_construct() -> None:
     bands = _minhash_bands_frame(spark, t)
     cand = _minhash_candidate_pairs(spark, bands)
     cand.write.mode("overwrite").parquet(f"{SCRATCH}/cand")
-    coded_verify_side(t, "toks", "codes").write.mode("overwrite").parquet(
-        f"{SCRATCH}/codes"
-    )
+    coded_sets(t, "toks").write.mode("overwrite").parquet(f"{SCRATCH}/codes")
     m.write.mode("overwrite").parquet(f"{SCRATCH}/members")
     n_cand = spark.read.parquet(f"{SCRATCH}/cand").count()
     n_docs = spark.read.parquet(f"{SCRATCH}/codes").count()
@@ -94,26 +92,19 @@ def phase_verify(shard: int) -> None:
     """Exact coded Jaccard on one disjoint pair shard."""
     from pyspark.sql import functions as F
 
-    from bigdataprojectspring16_spark.llmops.dedup import NEAR_DUP_JACCARD
+    from bigdataprojectspring16_spark.llmops.dedup import (
+        NEAR_DUP_JACCARD,
+        exact_jaccard,
+    )
 
     spark = _session(f"sf100-shard-verify-{shard}")
     cand = spark.read.parquet(f"{SCRATCH}/cand").where(
         F.pmod(F.xxhash64("doc_a", "doc_b"), F.lit(NSHARDS)) == shard
     )
     codes = spark.read.parquet(f"{SCRATCH}/codes")
-    ta = codes.select(F.col("doc_id").alias("doc_a"),
-                      F.col("codes").alias("toks_a"))
-    tb = codes.select(F.col("doc_id").alias("doc_b"),
-                      F.col("codes").alias("toks_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    union = F.size(F.array_union(F.col("toks_a"), F.col("toks_b")))
     verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
+        exact_jaccard(codes, cand)
+        .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= NEAR_DUP_JACCARD)
     )
     verified.write.mode("overwrite").parquet(f"{SCRATCH}/verified_{shard}")

@@ -26,7 +26,7 @@ canonicalized rows (the driver-comparator discipline).
 
 Run:  python tools/streaming_sf1_run.py \
           > tools/receipts/streaming_sf1_r11.txt 2>&1
-Env:  STREAMING_SF_DIR (default /root/repo/.bench_sf1)
+Env:  STREAMING_SF_DIR (default .bench_sf1 in this checkout)
       STREAMING_BATCHES (default 8)
 """
 
@@ -39,7 +39,8 @@ import tempfile
 import time
 import uuid
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402
@@ -48,7 +49,7 @@ from bigdataprojectspring16_spark import get_session  # noqa: E402
 from bigdataprojectspring16_spark.streaming import streams  # noqa: E402
 from bigdataprojectspring16_spark.tables import load_table  # noqa: E402
 
-SF_DIR = os.environ.get("STREAMING_SF_DIR", "/root/repo/.bench_sf1")
+SF_DIR = os.environ.get("STREAMING_SF_DIR", f"{REPO}/.bench_sf1")
 N_BATCHES = int(os.environ.get("STREAMING_BATCHES", "8"))
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
