@@ -102,7 +102,14 @@ def compute_driver_window(
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query (TPC-H Q1-shape pricing summary) on sf0.001."""
+    """Flagship query (TPC-H Q1-shape pricing summary) on sf0.001.
+
+    Only the runtime-settable engine confs are asserted here. The
+    managed-memory page (``spark.buffer.pageSize``) is startup-only,
+    so a session the driver built keeps the page it was started with;
+    only sessions ``session.get_session`` builds get the heap-sized
+    page (``session.page_bytes_for_heap``).
+    """
     engine.session.ensure_session_confs(spark)
     return engine.QUERIES["agg_pricing_summary"](spark, "/root/testdata/sf0.001")
 

@@ -139,6 +139,7 @@ def _release_refs(spark) -> None:
 
 def main() -> None:
     from bigdataprojectspring16_spark import QUERIES, get_session
+    from bigdataprojectspring16_spark.session import session_page_bytes
 
     spark = get_session("bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -198,6 +199,9 @@ def main() -> None:
             # session actually got.
             "cpus": int(cpus) if cpus.isdigit() else cpus,
             "default_parallelism": spark.sparkContext.defaultParallelism,
+            # The managed-memory page the JVM used (SCALING.md
+            # "Global rules").
+            "page_bytes": session_page_bytes(spark),
         }
     )
     # Stop the JVM FIRST, then print: the JSON is guaranteed to be the

@@ -12,6 +12,7 @@ timestamps are zone-less and the DuckDB oracle compares them naively
 from __future__ import annotations
 
 import os
+import re
 import weakref
 
 from pyspark.sql import SparkSession
@@ -192,18 +193,56 @@ def autosize_shuffle_partitions(
         return required
     return None
 
+
+#: Spark's ``TaskMemoryManager`` page-table size: a task can hold at
+#: most this many pages at once.
+_PAGE_TABLE_SIZE = 8192
+_PAGE_FLOOR_BYTES = 1 << 20
+_MEMORY_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def page_bytes_for_heap(heap: str) -> int:
+    """``spark.buffer.pageSize`` for a driver heap given as a
+    ``spark.driver.memory`` string ("8g", "8192m", "24G"; no suffix
+    means MiB, as Spark reads it): max(1 MiB, ceil(heap / 8192)).
+
+    8,192 pages then always cover the whole heap, so no task runs out
+    of page-table entries before it runs out of memory. And the page
+    stays below G1's humongous threshold, half a region, for heaps
+    from 2g to 64g (G1 sizes a region to heap / 2048 rounded down to
+    a power of two, at most 32 MiB): 1 MiB at 8g, where the threshold
+    is 2 MiB. Spark's own choice is nextPow2(execution pool / cores /
+    16) capped at 64 MiB, which is the cap on an 8g heap, so every
+    sort and hash-aggregate task allocated and zeroed a 64 MiB
+    humongous ``long[]`` even for a 3-group result (SCALING.md
+    "Global rules").
+    """
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", heap.strip().lower())
+    if m is None:
+        raise ValueError(f"not a spark.driver.memory size: {heap!r}")
+    heap_bytes = int(m[1]) * _MEMORY_UNITS[m[2] or "m"]
+    return max(_PAGE_FLOOR_BYTES, -(-heap_bytes // _PAGE_TABLE_SIZE))
+
+
+#: Env-overridable (r7): at the in-repo sf1 decade a full 39-query
+#: bench.py pass in ONE session can transiently hold enough live
+#: broadcast blocks that an 8g driver heap fails a broadcast build
+#: mid-run (each key's sweep passes at 8g; the accumulation across
+#: ~80 consecutive executions is what needs headroom — broadcasts
+#: are only reclaimed by GC-driven ContextCleaner cycles). Local
+#: sizing only; on a cluster this comes from spark-submit.
+_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+
 #: Startup-only configs (not runtime settable) used when WE build the
 #: session (tests / bench). On a real cluster these come from
 #: spark-submit; sized here for local[32] with 128 GiB.
 _STARTUP_CONFS: dict[str, str] = {
-    # Env-overridable (r7): at the in-repo sf1 decade a full 39-query
-    # bench.py pass in ONE session can transiently hold enough live
-    # broadcast blocks that an 8g driver heap fails a broadcast build
-    # mid-run (each key's sweep passes at 8g; the accumulation across
-    # ~80 consecutive executions is what needs headroom — broadcasts
-    # are only reclaimed by GC-driven ContextCleaner cycles). Local
-    # sizing only; on a cluster this comes from spark-submit.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.memory": _DRIVER_MEMORY,
+    # Managed-memory page sized to the heap (page_bytes_for_heap):
+    # 1 MiB at 8g instead of Spark's 64 MiB, a G1 humongous object in
+    # every sort and aggregate task. Plans, jobs and shuffle bytes do
+    # not change. Startup-only: a driver-built session keeps its own.
+    "spark.buffer.pageSize": f"{page_bytes_for_heap(_DRIVER_MEMORY)}b",
     # Tuned directly when WE build the session; externally-built
     # sessions only get this if they sit at the stock default (see
     # ensure_session_confs).
@@ -286,8 +325,19 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def session_page_bytes(spark: SparkSession) -> int:
+    """The managed-memory page size the session's JVM actually uses."""
+    env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+    return int(env.memoryManager().pageSizeBytes())
+
+
 def get_session(app_name: str = "bigdataprojectspring16_spark") -> SparkSession:
-    """Build (or fetch) the tuned SparkSession for tests and bench."""
+    """Build (or fetch) the tuned SparkSession for tests and bench.
+
+    Startup confs, the page size among them, only take effect when
+    this call starts the JVM; a session that already exists keeps its
+    own.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     for k, v in {**_STARTUP_CONFS, **ENGINE_CONFS}.items():

@@ -8,11 +8,12 @@ hatches) are prose-labeled and excluded by construction.
 
 from __future__ import annotations
 
+import pathlib
 import re
 
 from bigdataprojectspring16_spark import ORACLES, QUERIES
 
-SURVEY = "/root/repo/SURVEY.md"
+SURVEY = pathlib.Path(__file__).resolve().parent.parent / "SURVEY.md"
 
 
 def _survey_section_2() -> str:

@@ -205,33 +205,36 @@ def selfcheck() -> None:
     the declared single-plan key's result."""
     import hashlib
 
+    import tempfile
+
     sf_dir = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.1")
-    scratch = "/tmp/sf100_selfcheck_scratch"
-    out = "/tmp/sf100_selfcheck_out"
-    env = {"SWEEP_SF_DIR": sf_dir, "SWEEP_SCRATCH": scratch,
-           "SWEEP_OUT": out, "SWEEP_NSHARDS": str(NSHARDS)}
-    os.makedirs(scratch, exist_ok=True)
-    _run_phase(["construct"], env)
-    for s in range(NSHARDS):
-        _run_phase(["verify", str(s)], env)
-    _run_phase(["expand"], env)
+    with tempfile.TemporaryDirectory(prefix="sf100_selfcheck_") as tmp:
+        scratch = os.path.join(tmp, "scratch")
+        out = os.path.join(tmp, "out")
+        env = {"SWEEP_SF_DIR": sf_dir, "SWEEP_SCRATCH": scratch,
+               "SWEEP_OUT": out, "SWEEP_NSHARDS": str(NSHARDS)}
+        os.makedirs(scratch)
+        _run_phase(["construct"], env)
+        for s in range(NSHARDS):
+            _run_phase(["verify", str(s)], env)
+        _run_phase(["expand"], env)
 
-    from bigdataprojectspring16_spark import QUERIES
+        from bigdataprojectspring16_spark import QUERIES
 
-    spark = _session("sf100-selfcheck-compare")
-    sharded = sorted(
-        repr(tuple(r)) for r in spark.read.parquet(out).collect()
-    )
-    declared = sorted(
-        repr(tuple(r))
-        for r in QUERIES["dedup_minhash_lsh"](spark, sf_dir).collect()
-    )
+        spark = _session("sf100-selfcheck-compare")
+        sharded = sorted(
+            repr(tuple(r)) for r in spark.read.parquet(out).collect()
+        )
+        declared = sorted(
+            repr(tuple(r))
+            for r in QUERIES["dedup_minhash_lsh"](spark, sf_dir).collect()
+        )
+        spark.stop()
     h = lambda rows: hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
     print(f"selfcheck {sf_dir}: sharded {len(sharded)} pairs hash "
           f"{h(sharded)}; declared {len(declared)} pairs hash "
           f"{h(declared)}; "
           f"{'EQUAL' if sharded == declared else 'MISMATCH'}")
-    spark.stop()
     if sharded != declared:
         raise SystemExit(1)
 
