@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Construction-derived output audit for an isomorphic-copy documents
-fixture (the sf20/sf30/sf100 decade points, SCALING.md §SF100).
+"""Construction-derived output audit of ``dedup_minhash_lsh`` on an
+isomorphic-copy documents fixture (the sf20/sf30/sf50/sf100 decade
+points, SCALING.md §SF100).
 
-The big fixtures are COPIES x the sf0.1 corpus with per-copy token
-prefixes (tools/make_sf100_docs.py), so the exact result is known by
-construction: every near-dup pair lives INSIDE one copy, each copy's
-pair set is isomorphic to the sf0.1 pair set, and the exact-verified
-banding result must satisfy
+The fixture is COPIES x the sf0.1 corpus with per-copy token prefixes
+(``tools/make_copies.py --tables documents``), so the exact result is
+known by construction: every near-dup pair lives INSIDE one copy, each
+copy's pair set is isomorphic to the sf0.1 pair set, and the
+exact-verified banding result must satisfy
   - cross-copy pairs == 0            (disjointness invariant),
   - every sampled copy is a SUBSET of the sf0.1 pair set (precision
     1.0 — the exact-verify stage admits no false pair) with per-copy
@@ -19,29 +20,32 @@ banding result must satisfy
     bound is an upper bound, not an equality; precision is 1.0 by
     the exact-verify stage).
 
+COPIES is read off the fixture: max(doc_id) div the doc_id stride + 1.
+
 Usage:
-  AUDIT_SF_DIR=.bench_sf30 AUDIT_COPIES=300 \
-      python tools/minhash_copy_audit.py [copy_id ...]
-Default sampled copies: 0, COPIES//2, COPIES-1.
+  AUDIT_SF_DIR=.bench_sf30 python tools/minhash_copy_audit.py [copy_id ...]
+Default sampled copies: 0, COPIES//2, COPIES-1. AUDIT_REUSE=1 reads back
+the pair output that an earlier run (or sf100_sharded_sweep.py) wrote.
 """
 import hashlib
 import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(TOOLS)
 sys.path.insert(0, REPO)
+sys.path.insert(0, TOOLS)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from bigdataprojectspring16_spark import QUERIES, get_session  # noqa: E402
+import make_copies  # noqa: E402
 
 BIG_DIR = os.environ.get("AUDIT_SF_DIR", f"{REPO}/.bench_sf30")
 REF_DIR = os.environ.get("AUDIT_REF_DIR", "/root/testdata/sf0.1")
-COPIES = int(os.environ.get("AUDIT_COPIES", "300"))
-STRIDE = int(os.environ.get("AUDIT_STRIDE", "10000"))
-KEY = os.environ.get("AUDIT_KEY", "dedup_minhash_lsh")
-sample = [int(a) for a in sys.argv[1:]] or [0, COPIES // 2, COPIES - 1]
+STRIDE = make_copies.STRIDE["doc_id"]
+KEY = "dedup_minhash_lsh"
 
 
 def pair_hash(rows) -> str:
@@ -51,6 +55,9 @@ def pair_hash(rows) -> str:
 
 
 spark = get_session("minhash-copy-audit")
+COPIES = spark.read.parquet(f"{BIG_DIR}/documents.parquet").agg(
+    F.max("doc_id")).first()[0] // STRIDE + 1
+sample = [int(a) for a in sys.argv[1:]] or [0, COPIES // 2, COPIES - 1]
 
 t0 = time.time()
 ref_rows = QUERIES[KEY](spark, REF_DIR).collect()

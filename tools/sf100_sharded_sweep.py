@@ -31,9 +31,11 @@ Usage:
   python tools/sf100_sharded_sweep.py selfcheck  # sf0.1 equivalence
   (phases construct|verify|expand are internal subprocess entries)
 
-Env: SWEEP_SF_DIR, SWEEP_NSHARDS (default 4), SWEEP_SCRATCH,
-SWEEP_OUT, SPARK_GRAFT_DRIVER_MEM (per-phase heap, default 16g for
-the decade fixture).
+Env: SWEEP_SF_DIR, SWEEP_NSHARDS (default 4), SWEEP_OUT,
+SPARK_GRAFT_DRIVER_MEM (per-phase heap, default 16g for the decade
+fixture). The shards, codes and members go to a fresh temporary
+directory (under $TMPDIR) that is removed once the run has measured
+it; OUT stays, for tools/minhash_copy_audit.py to adjudicate.
 """
 
 import json
@@ -41,6 +43,7 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 
@@ -50,7 +53,8 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SWEEP_SF_DIR", f"{REPO}/.bench_sf100")
 NSHARDS = int(os.environ.get("SWEEP_NSHARDS", "4"))
-SCRATCH = os.environ.get("SWEEP_SCRATCH", "/tmp/sf100_shards")
+#: Set by the orchestrator for its phase subprocesses.
+SCRATCH = os.environ.get("SWEEP_SCRATCH", "")
 OUT = os.environ.get(
     "SWEEP_OUT",
     f"/tmp/copy_audit_{os.path.basename(SF_DIR.rstrip('/'))}_dedup_minhash_lsh",
@@ -166,28 +170,32 @@ class DiskWatch:
         return self.start_free / gb, (self.start_free - self.min_free) / gb
 
 
-def orchestrate() -> None:
-    os.makedirs(SCRATCH, exist_ok=True)
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    print(f"sharded sweep: sf_dir={SF_DIR} nshards={NSHARDS} "
-          f"scratch={SCRATCH} heap={heap}", flush=True)
-    watch = DiskWatch()
-    walls = {}
-    walls["construct"] = _run_phase(
-        ["construct"], {"SPARK_GRAFT_DRIVER_MEM": heap}
-    )
+def _run_phases(env: dict) -> dict:
+    """construct, verify per shard, expand: each its own subprocess."""
+    walls = {"construct": _run_phase(["construct"], env)}
     for s in range(NSHARDS):
-        walls[f"verify_{s}"] = _run_phase(
-            ["verify", str(s)], {"SPARK_GRAFT_DRIVER_MEM": heap}
+        walls[f"verify_{s}"] = _run_phase(["verify", str(s)], env)
+    walls["expand"] = _run_phase(["expand"], env)
+    return walls
+
+
+def orchestrate() -> None:
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    scratch = tempfile.mkdtemp(prefix="sf100_shards_")
+    print(f"sharded sweep: sf_dir={SF_DIR} nshards={NSHARDS} "
+          f"scratch={scratch} heap={heap}", flush=True)
+    try:
+        watch = DiskWatch()
+        walls = _run_phases(
+            {"SWEEP_SCRATCH": scratch, "SPARK_GRAFT_DRIVER_MEM": heap}
         )
-    walls["expand"] = _run_phase(
-        ["expand"], {"SPARK_GRAFT_DRIVER_MEM": heap}
-    )
-    start_free, peak_draw = watch.stop()
-    art = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _dn, fns in os.walk(SCRATCH) for f in fns
-    ) / (1 << 30)
+        start_free, peak_draw = watch.stop()
+        art = sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _dn, fns in os.walk(scratch) for f in fns
+        ) / (1 << 30)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
     print(json.dumps({
         "metric": "sharded_sweep_total_sec",
         "value": round(sum(walls.values()), 1),
@@ -197,6 +205,7 @@ def orchestrate() -> None:
         "scratch_artifacts_gb": round(art, 1),
         "nshards": NSHARDS,
         "sf_dir": SF_DIR,
+        "out": OUT,
     }), flush=True)
 
 
@@ -205,19 +214,11 @@ def selfcheck() -> None:
     the declared single-plan key's result."""
     import hashlib
 
-    import tempfile
-
     sf_dir = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.1")
     with tempfile.TemporaryDirectory(prefix="sf100_selfcheck_") as tmp:
-        scratch = os.path.join(tmp, "scratch")
         out = os.path.join(tmp, "out")
-        env = {"SWEEP_SF_DIR": sf_dir, "SWEEP_SCRATCH": scratch,
-               "SWEEP_OUT": out, "SWEEP_NSHARDS": str(NSHARDS)}
-        os.makedirs(scratch)
-        _run_phase(["construct"], env)
-        for s in range(NSHARDS):
-            _run_phase(["verify", str(s)], env)
-        _run_phase(["expand"], env)
+        _run_phases({"SWEEP_SF_DIR": sf_dir, "SWEEP_SCRATCH": tmp,
+                     "SWEEP_OUT": out})
 
         from bigdataprojectspring16_spark import QUERIES
 

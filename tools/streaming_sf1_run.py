@@ -24,9 +24,12 @@ sentinel chunk advances the watermark so append-mode outputs flush.
 Equality is exact row-set equality plus a sha256 over the sorted,
 canonicalized rows (the driver-comparator discipline).
 
-Run:  python tools/streaming_sf1_run.py \
+Run:  python tools/make_copies.py --copies 10 --out .bench_sf1
+      python tools/streaming_sf1_run.py \
           > tools/receipts/streaming_sf1_r11.txt 2>&1
-Env:  STREAMING_SF_DIR (default .bench_sf1 in this checkout)
+Env:  STREAMING_SF_DIR (default .bench_sf1 in this checkout; the
+      replay reads only events, so the sf50 point is built by
+      ``make_copies.py --copies 500 --tables events --out .bench_sf50``)
       STREAMING_BATCHES (default 8)
 """
 
