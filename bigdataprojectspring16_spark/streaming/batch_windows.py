@@ -6,7 +6,7 @@ uses the *same* API in batch and streaming (``F.window`` /
 the declared batch queries are the oracle-checkable twins of the
 streaming pipelines wired up in ``streaming/streams.py`` and verified
 in tests/test_streaming.py (watermark late-drop, dedup-within-
-watermark, stateful counter via transformWithState/applyInPandasWithState).
+watermark, stateful counter via applyInPandasWithState).
 
 Scale notes: tumbling/sliding windows are plain hash aggregations on
 (window, key) — partial-agg friendly; session windows and the
@@ -324,8 +324,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-user purchase counter — batch twin of the stateful op.
 
     The streaming form keeps a per-user counter in the state store
-    (``transformWithStateInPandas`` / ``applyInPandasWithState``,
-    exercised in tests/test_streaming.py); the batch twin is the
+    (``applyInPandasWithState``, exercised in tests/test_streaming.py); the batch twin is the
     cumulative window count, which is the oracle-checkable
     equivalent (SURVEY §2.J).
     """

@@ -166,6 +166,10 @@ def stateful_purchase_counter(events: DataFrame) -> DataFrame:
     event_id) before numbering so replays are deterministic; across
     batches the counter continues from state — asserted in
     tests/test_streaming.py by feeding two batches for one user.
+
+    It is the package's only stateful form: Spark 4's
+    ``transformWithStateInPandas`` needs ``google.protobuf`` in the
+    Python workers, which the project does not depend on.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -197,60 +201,6 @@ def stateful_purchase_counter(events: DataFrame) -> DataFrame:
             stateStructType=COUNTER_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def stateful_purchase_counter_tws(events: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` form of the counter.
-
-    Same semantics as :func:`stateful_purchase_counter` through the
-    newer arbitrary-state API (typed value state, RocksDB-backed
-    store); tests assert the two APIs produce identical output on
-    the same replay. NOTE: the TWS state protocol requires a working
-    ``google.protobuf``; in environments without it (like this one —
-    measured: ``ImportError: cannot import name 'descriptor'``) the
-    query fails at planning with STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE, so ``stateful_purchase_counter`` is the
-    portable form and this one is cover for protobuf-equipped
-    clusters (its test skips when protobuf is absent).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class PurchaseCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "event_id"])
-                seqs = range(n + 1, n + 1 + len(pdf))
-                n += len(pdf)
-                yield pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"],
-                        "event_id": pdf["event_id"],
-                        "ts": pdf["ts"],
-                        "purchase_seq": list(seqs),
-                    }
-                )
-            self._n.update((n,))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.where(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=PurchaseCounter(),
-            outputStructType=COUNTER_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )
 

@@ -1,8 +1,11 @@
-"""Shared fixtures: one SparkSession per test session, a DuckDB
-connection with the fixture views registered, and the mirror-oracle
-comparator replicating the driver's check (row-count + schema +
-order-insensitive value comparison) — run locally before the driver
-ever does (SURVEY §5.2.1).
+"""Shared fixtures: one SparkSession per test session, DuckDB over the
+fixture, and the oracle check replicating the driver's t2 gate
+(SURVEY §5.2.1). The DuckDB setup and the check are
+``tools/driver_sim.py``'s own (``oracle_db``, ``check``: row count,
+sorted column names, order-insensitive value hash), so Tier-1 and the
+sweep cannot drift apart. A verdict whose key (SQL, fixture bytes,
+comparator bytes) is in the committed ``tools/oracle_cache`` is read
+from it; a miss runs DuckDB live and writes nothing.
 """
 
 from __future__ import annotations
@@ -14,16 +17,14 @@ import os
 import shutil
 import sys
 
-import duckdb
 import pytest
 
 from bigdataprojectspring16_spark import get_session
-from bigdataprojectspring16_spark.tables import TABLE_NAMES
 
 # The verifier tooling (comparator, broadcast audit, driver_sim) lives
 # in tools/, outside the package.
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-from comparator import norm  # noqa: E402
+from driver_sim import Oracles, check, oracle_db  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMALL = "/root/testdata/sf0.001"
@@ -83,53 +84,22 @@ def bucketed_layout_unavailable(monkeypatch) -> None:
 
 @pytest.fixture(scope="session")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-    yield con
-    con.close()
+    """DuckDB with a view per fixture table; its spill dir goes at teardown."""
+    with oracle_db(SF_DIR) as con:
+        yield con
 
 
-def _sorted_rows(cols, rows):
-    """Rows rendered cell by cell with the driver-grade comparator's
-    type-tagged ``norm`` (tools/comparator.py: a DuckDB HUGEINT
-    arriving as decimal128 never equals a Spark int64, VERDICT.md r2
-    item 3), in sorted-column order, sorted for order-insensitivity."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm(r[i]) for i in order) for r in rows)
+@pytest.fixture(scope="session")
+def oracles(ddb):
+    return Oracles(ddb, SF_DIR)
 
 
-def assert_matches_oracle(spark, ddb, query_fn, oracle: str, sf_dir: str = SF_DIR):
-    """The mirror of the driver's t2 check, strict on column names."""
-    sdf = query_fn(spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    # .arrow() is the type-faithful fetch: HUGEINT -> decimal128
-    # (Python Decimal), int64 stays int, NULLs in int columns stay
-    # None — exactly the representations the driver compares against
-    # (a fetchall() int would mask the HUGEINT class entirely).
-    d_tab = ddb.execute(oracle).arrow()
-    d_cols = list(d_tab.column_names)
-    d_rows = [tuple(d[c] for c in d_cols) for d in d_tab.to_pylist()]
-
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"column mismatch: spark={sorted(s_cols)} duckdb={sorted(d_cols)}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"row count mismatch: spark={len(s_rows)} duckdb={len(d_rows)}"
-    )
-    s_norm = _sorted_rows(s_cols, s_rows)
-    d_norm = _sorted_rows(d_cols, d_rows)
-    if s_norm != d_norm:
-        diffs = [
-            (i, a, b)
-            for i, (a, b) in enumerate(zip(s_norm, d_norm))
-            if a != b
-        ][:5]
-        raise AssertionError(
-            f"value mismatch ({len(diffs)}+ differing rows shown):\n"
-            + "\n".join(f"  row {i}:\n    spark : {a}\n    duckdb: {b}" for i, a, b in diffs)
-        )
+def assert_matches_oracle(spark, oracles, name: str, query_fn, sql: str):
+    """The driver's t2 check of ``query_fn`` against ``sql``, keyed
+    ``name`` in the oracle cache; raises with driver_sim's status line
+    (the first differing row on a hash mismatch)."""
+    sdf = query_fn(spark, oracles.sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    ok, status, _hit = check(oracles, name, sql, srows, sdf.columns)
+    if not ok:
+        raise AssertionError(f"{name}: {status}")

@@ -10,6 +10,9 @@ never re-enter via a new oracle:
 - the same query with ``CAST(... AS BIGINT)`` must PASS;
 - property check (Hypothesis): the discipline holds for arbitrary
   int64 inputs, not just the fixture values.
+
+The ad-hoc ``VALUES`` oracles below have no committed verdict, so
+``driver_sim.check`` runs each one live in DuckDB.
 """
 
 from __future__ import annotations
@@ -34,20 +37,22 @@ def _query_from(rows):
     return q
 
 
-def test_uncast_hugeint_sum_is_caught(spark, ddb):
+def test_uncast_hugeint_sum_is_caught(spark, oracles):
     q = _query_from([1, 2, 3])
     # DuckDB types sum(BIGINT) as HUGEINT -> decimal128 via Arrow.
     with pytest.raises(AssertionError):
         assert_matches_oracle(
-            spark, ddb, q, "SELECT sum(x) AS total FROM (VALUES (1), (2), (3)) v(x)"
+            spark, oracles, "uncast_sum", q,
+            "SELECT sum(x) AS total FROM (VALUES (1), (2), (3)) v(x)",
         )
 
 
-def test_cast_bigint_sum_passes(spark, ddb):
+def test_cast_bigint_sum_passes(spark, oracles):
     q = _query_from([1, 2, 3])
     assert_matches_oracle(
         spark,
-        ddb,
+        oracles,
+        "cast_sum",
         q,
         "SELECT CAST(sum(x) AS BIGINT) AS total FROM (VALUES (1), (2), (3)) v(x)",
     )
@@ -55,17 +60,19 @@ def test_cast_bigint_sum_passes(spark, ddb):
 
 @settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(st.integers(min_value=-(2**40), max_value=2**40), min_size=1, max_size=8))
-def test_hugeint_discipline_property(spark, ddb, xs):
+def test_hugeint_discipline_property(spark, oracles, xs):
     """For ANY int64 input: uncast sum mismatches, cast sum matches."""
     q = _query_from(xs)
     values = ", ".join(f"({v})" for v in xs)
     with pytest.raises(AssertionError):
         assert_matches_oracle(
-            spark, ddb, q, f"SELECT sum(x) AS total FROM (VALUES {values}) v(x)"
+            spark, oracles, "uncast_sum", q,
+            f"SELECT sum(x) AS total FROM (VALUES {values}) v(x)",
         )
     assert_matches_oracle(
         spark,
-        ddb,
+        oracles,
+        "cast_sum",
         q,
         f"SELECT CAST(sum(x) AS BIGINT) AS total FROM (VALUES {values}) v(x)",
     )
@@ -73,8 +80,8 @@ def test_hugeint_discipline_property(spark, ddb, xs):
 
 def test_norm_cell_tags_types():
     """Decimal, int, float, bool of equal numeric value all differ, and
-    NULL differs from each (the cell rendering the mirror comparator
-    shares with tools/driver_sim.py)."""
+    NULL differs from each (the cell rendering driver_sim's check
+    hashes)."""
     import decimal
 
     cells = [norm(1), norm(1.0), norm(decimal.Decimal(1)), norm(True)]

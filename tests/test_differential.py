@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from tests.conftest import _sorted_rows
+from comparator import first_diff, value_hash
 
 maybe_int = st.one_of(st.none(), st.integers(min_value=-100, max_value=100))
 maybe_str = st.one_of(st.none(), st.sampled_from(["x", "xy", "abc", "", "xx"]))
@@ -49,7 +49,9 @@ def _compare(sdf_result, con, sql):
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
     assert sorted(s_cols) == sorted(d_cols)
-    assert _sorted_rows(s_cols, s_rows) == _sorted_rows(d_cols, d_rows)
+    assert value_hash(s_rows, s_cols) == value_hash(d_rows, d_cols), first_diff(
+        s_rows, s_cols, d_rows, d_cols
+    )
 
 
 @given(rows=rows_strategy)

@@ -1,15 +1,21 @@
 """Mirror of the driver's t2 correctness gate (SURVEY §5.2.1).
 
-Every declared query runs through Spark AND its DuckDB oracle at
-sf0.01; rows-only keys are smoke-checked for non-empty, stable
-output. This is the same discipline the driver applies, run locally
-first.
+Every declared query runs through Spark at sf0.01 and is checked by
+``tools/driver_sim.check`` against its DuckDB oracle's verdict (row
+count, sorted column names, order-insensitive value hash). The
+verdict is read from the committed ``tools/oracle_cache`` when its
+key (SQL, fixture bytes, comparator bytes) matches and computed live
+otherwise; Tier-1 never writes the cache. The one axis that key
+misses, the DuckDB version, is guarded by
+``test_cached_verdicts_reproduce_live``. Rows-only keys are
+smoke-checked for non-empty output.
 """
 
 from __future__ import annotations
 
 import pytest
 
+import oracle_store  # tools/ is on sys.path (tests/conftest.py)
 from bigdataprojectspring16_spark import ORACLES, QUERIES
 
 from .conftest import SF_DIR, SF_SMALL, assert_matches_oracle
@@ -19,8 +25,19 @@ ROWS_ONLY_KEYS = sorted(set(QUERIES) - set(ORACLES))
 
 
 @pytest.mark.parametrize("key", ORACLE_KEYS)
-def test_oracle_parity(spark, ddb, key):
-    assert_matches_oracle(spark, ddb, QUERIES[key], ORACLES[key])
+def test_oracle_parity(spark, oracles, key):
+    assert_matches_oracle(spark, oracles, key, QUERIES[key], ORACLES[key])
+
+
+def test_cached_verdicts_reproduce_live(oracles):
+    """Stale-cache guard: ``Oracles.audit`` re-runs every cached verdict
+    live but the HEAVY_ORACLE_KEYS (minutes of DuckDB each), and none
+    may diverge. A DuckDB upgrade that changes an answer shows on
+    these keys as much as on the heavy ones."""
+    hits = [k for k in ORACLE_KEYS
+            if oracle_store.load(oracles.path(k, ORACLES[k])) is not None]
+    diverged = oracles.audit(ORACLES, hits, len(hits))
+    assert diverged == [], f"cached verdicts diverge from live DuckDB: {diverged}"
 
 
 @pytest.mark.parametrize("key", ROWS_ONLY_KEYS)

@@ -15,7 +15,7 @@ from bigdataprojectspring16_spark.sql import (
     register_views,
     to_spark_sql,
 )
-from tests.conftest import _sorted_rows
+from comparator import value_hash
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -31,8 +31,8 @@ def test_sql_equals_dataframe(spark, name):
     api_df = QUERIES[name](spark, SF_DIR)
     s_cols, a_cols = sql_df.columns, api_df.columns
     assert sorted(s_cols) == sorted(a_cols)
-    s = _sorted_rows(s_cols, [tuple(r) for r in sql_df.collect()])
-    a = _sorted_rows(a_cols, [tuple(r) for r in api_df.collect()])
+    s = value_hash([tuple(r) for r in sql_df.collect()], s_cols)
+    a = value_hash([tuple(r) for r in api_df.collect()], a_cols)
     assert s == a, f"{name}: SQL surface diverges from DataFrame surface"
 
 

@@ -225,52 +225,24 @@ def test_parquet_sink_with_checkpoint_restart_no_duplicates(spark):
 
 
 def test_stateful_counter_apis_agree_on_two_batch_replay(spark):
-    """Every available stateful-streaming API produces the same
-    counters on the same two-batch replay (cross-batch state).
-
-    The applyInPandasWithState leg ALWAYS runs — it is the executed
-    streaming proof for the declared ``stream_stateful_counter``
-    batch twin, asserted against the hand-computed ground truth.
-    The Spark 4 transformWithStateInPandas leg
-    (streams.stateful_purchase_counter_tws) additionally runs where
-    google.protobuf is importable (its state server speaks
-    protobuf); this environment ships no google module, so the tws
-    comparison is capability-gated instead of skipping the whole
-    test — the cross-batch state assertion executes everywhere.
-    """
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    impls = [("aip", streams.stateful_purchase_counter)]
-    if has_protobuf:
-        impls.append(("tws", streams.stateful_purchase_counter_tws))
+    """The applyInPandasWithState counter on the RocksDB state store
+    continues its per-user count across two micro-batches; the
+    executed streaming proof for the declared ``stream_stateful_counter``
+    batch twin, asserted against the hand-computed ground truth."""
     old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        batches = [
-            [_mk(0, 1), _mk(1, 2)],
-            [_mk(2, 3), _mk(3, 4, user_id=2)],
-        ]
-        results = {}
-        for name, build in impls:
-            r = Replay(spark, name, build, "update")
-            try:
-                for b in batches:
-                    r.feed(b)
-                results[name] = {
-                    row.event_id: row.purchase_seq for row in r.table().collect()
-                }
-            finally:
-                r.stop()
-        truth = {1: 1, 2: 2, 3: 3, 4: 1}
-        for name, _ in impls:
-            assert results[name] == truth, name
+        r = Replay(spark, "aip", streams.stateful_purchase_counter, "update")
+        try:
+            r.feed([_mk(0, 1), _mk(1, 2)])
+            r.feed([_mk(2, 3), _mk(3, 4, user_id=2)])
+            got = {row.event_id: row.purchase_seq for row in r.table().collect()}
+        finally:
+            r.stop()
+        assert got == {1: 1, 2: 2, 3: 3, 4: 1}
     finally:
         if old:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)

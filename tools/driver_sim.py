@@ -4,21 +4,17 @@ t2 oracle gate through the public surface, at any scale or sample.
 It imports ``__spark_entry__``, runs ``entry()``, then each chosen
 ``queries()`` key against its ``oracle_sql()`` in DuckDB (row count +
 sorted schema + order-insensitive value hash, ``tools/comparator.py``).
+``check`` is that per-key gate and ``oracle_db`` its DuckDB setup;
+Tier-1's parity test (``tests/conftest.py``) calls both, reading the
+committed verdicts without writing any.
 
-Type-faithful comparison (VERDICT.md r2 item 3): the oracle side is
-fetched via ``.arrow()`` (HUGEINT -> decimal128, int64 stays int64,
-NULLs stay NULL) and every value is hashed with a type tag, so an
-int64 ``6`` and a decimal128 ``6`` hash differently. Floats render at
-driver grade (VERDICT.md r5 item 4): ``round(v, 9)`` then ``repr``;
-the old ``%.6g`` masked q10's 307843.60-vs-307843.59 cent flip.
-``tests/test_driver_sim_comparator.py`` pins that pair.
+The comparison is type-faithful and float-strict
+(``tools/comparator.py``, pinned by
+``tests/test_driver_sim_comparator.py``): the oracle side is fetched
+via ``.arrow()``, so a HUGEINT sum never hashes equal to an int64.
 
-Usage:
-    python tools/driver_sim.py [--sf-dir DIR] [--sample-mod N]
-                               [--output-sample N] [--oracle-only]
-                               [key | @set ...]
-
-No key arguments runs the full registry. Named key sets:
+Usage: ``python tools/driver_sim.py [flags] [key | @set ...]``
+(``--help`` lists the flags); no key runs the full registry. Key sets:
 
     @all_pairs    the 13 keys whose oracle is all-pairs or recursive
                   SQL that DuckDB cannot finish above sf0.01
@@ -59,6 +55,7 @@ Environment: ``DUCKDB_MEM`` overrides DuckDB's memory cap (default
 ``DRIVER_SIM_CACHE_AUDIT=K`` re-runs K cached verdicts live.
 """
 import argparse
+import contextlib
 import hashlib
 import os
 import shutil
@@ -212,21 +209,32 @@ def resolve_keys(args: list[str], registry) -> list[str]:
     return sorted(keys)
 
 
-def _duckdb() -> duckdb.DuckDBPyConnection:
-    """An in-memory DuckDB that spills instead of crashing.
-
-    With no temp_directory an out-of-core operator cannot spill, so a
-    decade-scale oracle (simhash's 200M-row nibble stream at sf10)
-    dies with a bad-allocation OOM. The cap defaults to 40% of
-    physical RAM so the oracle never starves the Spark JVM running
-    beside it (ADVICE r10: a fixed 48GB exceeded smaller hosts).
-    """
+@contextlib.contextmanager
+def oracle_db(sf_dir: str | None = None):
+    """An in-memory DuckDB with a view per table of ``sf_dir`` (if
+    given) that spills to a private directory, removed on exit: with no
+    temp_directory a decade-scale oracle (simhash's 200M-row nibble
+    stream at sf10) dies OOM. The cap defaults to 40% of RAM so the
+    oracle never starves the Spark JVM beside it (ADVICE r10)."""
+    spill = tempfile.mkdtemp(prefix="duckdb_spill_")
     con = duckdb.connect()
-    con.execute("SET temp_directory='/tmp/duckdb_spill'")
-    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
-    default_mem = f"{max(1, ram * 2 // 5 // (1 << 30))}GB"
-    con.execute(f"SET memory_limit='{os.environ.get('DUCKDB_MEM', default_mem)}'")
-    return con
+    try:
+        con.execute(f"SET temp_directory='{spill}'")
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        default_mem = f"{max(1, ram * 2 // 5 // (1 << 30))}GB"
+        con.execute(f"SET memory_limit='{os.environ.get('DUCKDB_MEM', default_mem)}'")
+        if sf_dir:
+            _register_views(con, sf_dir)
+        yield con
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def _register_views(con, sf_dir: str) -> None:
+    """One view per fixture table, named as the oracle SQL reads it."""
+    for t in oracle_store.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
 
 def _build_sample(con, src: str, mod: int, dst: str) -> None:
@@ -273,21 +281,26 @@ def _sampled_df(sdf, col: str, mod: int):
     return sdf.where(knuth_hash(key, mod) == 0)
 
 
-def _fetch(con, sql: str):
-    """(rows, cols) via ``.arrow()``, the type-faithful path: HUGEINT
-    becomes decimal128 (Python Decimal), int64 stays int, NULLs in int
-    columns stay None (a pandas ``.df()`` would make them float64)."""
+def _live(con, sql: str):
+    """(verdict, rows) of executing ``sql`` now; a verdict is the
+    (nrows, cols, value_hash) triple a cache entry holds. ``.arrow()``
+    is the type-faithful fetch: HUGEINT becomes decimal128 (Python
+    Decimal), int64 stays int, NULLs in int columns stay None (a
+    pandas ``.df()`` would make them float64)."""
     otab = con.execute(sql).arrow()
     ocols = otab.column_names
-    return [tuple(d[c] for c in ocols) for d in otab.to_pylist()], ocols
+    orows = [tuple(d[c] for c in ocols) for d in otab.to_pylist()]
+    return {"nrows": len(orows), "cols": list(ocols),
+            "value_hash": value_hash(orows, ocols)}, orows
 
 
 class Oracles:
-    """The DuckDB side: each verdict triple (rows, cols, value hash)
-    replayed from ``tools/oracle_cache`` when the SQL, the parquet
-    fingerprint and the comparator are unchanged (VERDICT r11 #2).
-    Every hit is labelled in the per-key line and counted in the
-    footer; ``DRIVER_SIM_ORACLE_CACHE=0`` recomputes everything."""
+    """The DuckDB side: each verdict replayed from ``tools/oracle_cache``
+    when the SQL, the parquet fingerprint and the comparator are
+    unchanged (VERDICT r11 #2), else executed live. A live verdict
+    waits in ``unsaved`` until :meth:`save`, which only this script
+    calls: Tier-1 reads the committed cache and never writes it.
+    ``DRIVER_SIM_ORACLE_CACHE=0`` recomputes everything, saves nothing."""
 
     def __init__(self, con, sf_dir: str):
         self.con = con
@@ -295,29 +308,32 @@ class Oracles:
         self.cache_on = os.environ.get("DRIVER_SIM_ORACLE_CACHE", "1") != "0"
         self.comp_ver = oracle_store.comparator_version()
         self.data_fp = oracle_store.data_fingerprint(sf_dir)
+        self.unsaved = {}
 
     def path(self, name: str, sql: str) -> str:
         return oracle_store.cache_path(name, sql, self.comp_ver, self.data_fp)
 
-    def run(self, name: str, sql: str):
-        """(nrows, cols, value_hash, rows-or-None, cache hit)."""
+    def verdict(self, name: str, sql: str):
+        """(verdict, rows-or-None, cache hit)."""
         path = self.path(name, sql)
-        if self.cache_on:
-            cached = oracle_store.load(path)
-            if cached is not None:
-                return (cached["nrows"], cached["cols"], cached["value_hash"],
-                        None, True)
+        cached = oracle_store.load(path) if self.cache_on else None
+        if cached is not None:
+            return cached, None, True
         t0 = time.time()
-        orows, ocols = _fetch(self.con, sql)
-        ohash = value_hash(orows, ocols)
+        live, orows = _live(self.con, sql)
         if self.cache_on:
-            oracle_store.store(path, name, self.sf_dir, len(orows), ocols,
-                               ohash, time.time() - t0)
-        return len(orows), ocols, ohash, orows, False
+            self.unsaved[path] = (name, live, time.time() - t0)
+        return live, orows, False
 
-    def audit(self, sqls: dict[str, str], hit_keys: list[str], k: int) -> int:
-        """Re-execute ``k`` of this run's cached verdicts live
-        (VERDICT r12 #6); 2 on any divergence. The sample is
+    def save(self) -> None:
+        """Write every verdict computed live since the last save."""
+        for path, (name, verdict, secs) in self.unsaved.items():
+            oracle_store.store(path, name, self.sf_dir, verdict, secs)
+        self.unsaved.clear()
+
+    def audit(self, sqls: dict[str, str], hit_keys: list[str], k: int) -> list[str]:
+        """Re-execute ``k`` of the cached verdicts live (VERDICT r12 #6)
+        and return the keys whose verdict diverged. The sample is
         deterministic per (comparator, fixture) so a receipt is
         reproducible, and skips HEAVY_ORACLE_KEYS."""
         auditable = [n for n in hit_keys if n not in HEAVY_ORACLE_KEYS]
@@ -331,9 +347,7 @@ class Oracles:
         diverged = []
         for name in sample:
             cached = oracle_store.load(self.path(name, sqls[name]))
-            orows, ocols = _fetch(self.con, sqls[name])
-            live = {"nrows": len(orows), "cols": list(ocols),
-                    "value_hash": value_hash(orows, ocols)}
+            live, _ = _live(self.con, sqls[name])
             ok = cached == live
             print(f"cache-audit {'OK  ' if ok else 'DIVERGED'} {name}"
                   + ("" if ok else f": cached={cached} live={live}"))
@@ -344,8 +358,25 @@ class Oracles:
               f"heavy keys excluded)")
         if diverged:
             print(f"cache-audit FAILED: {diverged}")
-            return 2
-        return 0
+        return diverged
+
+
+def check(oracles: Oracles, name: str, sql: str, srows, scols):
+    """The driver's t2 gate for one key: Spark's rows against the
+    oracle's verdict on row count, sorted column names and
+    ``value_hash`` -> (ok, status line, cache hit). A hash mismatch
+    diffs against freshly executed rows, never a cached verdict."""
+    want, orows, hit = oracles.verdict(name, sql)
+    if len(srows) != want["nrows"] or sorted(scols) != sorted(want["cols"]):
+        return False, (f"MISMATCH rows {len(srows)}vs{want['nrows']} "
+                       f"cols {sorted(scols)}vs{sorted(want['cols'])}"), hit
+    if value_hash(srows, scols) == want["value_hash"]:
+        return True, (f"MATCH ({len(srows)} rows)"
+                      + (" [oracle-cache]" if hit else "")), hit
+    if orows is None:
+        want, orows = _live(oracles.con, sql)
+    return False, ("HASH MISMATCH "
+                   + first_diff(srows, scols, orows, want["cols"])), hit
 
 
 def _parser() -> argparse.ArgumentParser:
@@ -378,20 +409,16 @@ def main(argv=None) -> int:
         if undeclared:
             raise SystemExit(f"--output-sample: no sample column declared "
                              f"for {undeclared}")
-    con = _duckdb()
-    sample_dir = tempfile.mkdtemp(prefix="driver_sim_sample_") if args.sample_mod else None
-    try:
-        if sample_dir:
+    with oracle_db(None if args.sample_mod else args.sf_dir) as con:
+        if not args.sample_mod:
+            return _verify(args, con, args.sf_dir, keys, queries, entry_mod)
+        with tempfile.TemporaryDirectory(prefix="driver_sim_sample_") as sample_dir:
             _build_sample(con, args.sf_dir, args.sample_mod, sample_dir)
-        return _verify(args, con, sample_dir or args.sf_dir, keys, queries, entry_mod)
-    finally:
-        if sample_dir:
-            shutil.rmtree(sample_dir)
+            _register_views(con, sample_dir)
+            return _verify(args, con, sample_dir, keys, queries, entry_mod)
 
 
 def _verify(args, con, sf_dir, keys, queries, entry_mod) -> int:
-    for t in oracle_store.TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = entry_mod.oracle_sql()
     store = Oracles(con, sf_dir)
     mod_n = args.output_sample
@@ -422,29 +449,15 @@ def _verify(args, con, sf_dir, keys, queries, entry_mod) -> int:
             sdf = _sampled_df(sdf, FULL_OUTPUT[name], mod_n)
         srows = [tuple(r) for r in sdf.collect()]
         scols = [f.name for f in sdf.schema.fields]
-        ok = True
-        if name not in sqls:
-            rows_only.append(name)
-            status = f"rows-only ({len(srows)} rows)"
-        else:
-            n_orows, ocols, ohash, orows, hit = store.run(name, sqls[name])
+        if name in sqls:
+            ok, status, hit = check(store, name, sqls[name], srows, scols)
+            store.save()
             if hit:
                 hit_keys.append(name)
-            same_shape = (len(srows) == n_orows
-                          and sorted(scols) == sorted(ocols))
-            ok = same_shape and value_hash(srows, scols) == ohash
-            if ok:
-                status = (f"MATCH ({len(srows)} rows)"
-                          + (" [oracle-cache]" if hit else ""))
-            elif not same_shape:
-                status = (f"MISMATCH rows {len(srows)}vs{n_orows} "
-                          f"cols {sorted(scols)}vs{sorted(ocols)}")
-            else:
-                # A cached verdict never decides a failure's
-                # diagnostics: diff against freshly executed rows.
-                if orows is None:
-                    orows, ocols = _fetch(con, sqls[name])
-                status = "HASH MISMATCH " + first_diff(srows, scols, orows, ocols)
+        else:
+            ok = True
+            rows_only.append(name)
+            status = f"rows-only ({len(srows)} rows)"
         print(f"{'OK ' if ok else 'FAIL'} {name}: {status}", flush=True)
         if mod_n and not srows:
             print(f"WARN {name}: empty sample — raise density", flush=True)
@@ -471,14 +484,15 @@ def _prewarm(store: Oracles, sqls: dict[str, str], sf_dir: str) -> int:
     done = skipped = 0
     for name, sql in sqls.items():
         t0 = time.time()
-        nrows, *_rest, hit = store.run(name, sql)
+        verdict, _rows, hit = store.verdict(name, sql)
+        store.save()
         if hit:
             skipped += 1
             print(f"skip {name}: cached", flush=True)
         else:
             done += 1
-            print(f"warm {name}: {nrows} rows in {time.time() - t0:.1f}s",
-                  flush=True)
+            print(f"warm {name}: {verdict['nrows']} rows in "
+                  f"{time.time() - t0:.1f}s", flush=True)
     print(f"\nprewarm: {done} computed, {skipped} already cached, "
           f"sf_dir={sf_dir}", flush=True)
     return 0

@@ -77,6 +77,12 @@ _PREFIXED = ("array_to_string(list_transform(string_split(text, ' '), "
              "t -> 'c' || i || '_' || t), ' ')")
 
 
+def pairs_out(sf_dir: str) -> str:
+    """Where the audits write ``dedup_minhash_lsh``'s pairs on the
+    fixture ``sf_dir``: inside it, so no two fixtures share one."""
+    return os.path.join(os.path.abspath(sf_dir), "_audit_dedup_minhash_lsh")
+
+
 def _column(table: str, col: str, dims: int) -> str:
     """The SELECT item for one source column of copy ``i``."""
     if col in REMAP[table]:

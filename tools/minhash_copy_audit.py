@@ -25,7 +25,8 @@ COPIES is read off the fixture: max(doc_id) div the doc_id stride + 1.
 Usage:
   AUDIT_SF_DIR=.bench_sf30 python tools/minhash_copy_audit.py [copy_id ...]
 Default sampled copies: 0, COPIES//2, COPIES-1. AUDIT_REUSE=1 reads back
-the pair output that an earlier run (or sf100_sharded_sweep.py) wrote.
+the pairs an earlier run (or sf100_sharded_sweep.py) wrote inside the
+fixture (``make_copies.pairs_out``).
 """
 import hashlib
 import os
@@ -71,7 +72,7 @@ print(
 # Materialize the big result ONCE; every audit query reads it back.
 # AUDIT_REUSE=1 reuses an existing materialization (e.g. re-running
 # only the audit queries after an adjudication-logic fix).
-out = f"/tmp/copy_audit_{os.path.basename(BIG_DIR)}_{KEY}"
+out = make_copies.pairs_out(BIG_DIR)
 t0 = time.time()
 if not (os.environ.get("AUDIT_REUSE") == "1"
         and os.path.exists(f"{out}/_SUCCESS")):

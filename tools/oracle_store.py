@@ -84,8 +84,9 @@ def load(path: str):
         return None
 
 
-def store(path: str, key: str, sf_dir: str, nrows: int, cols,
-          vhash: str, elapsed: float) -> None:
+def store(path: str, key: str, sf_dir: str, verdict: dict,
+          elapsed: float) -> None:
+    """Write ``verdict`` (the dict ``load`` returns) atomically."""
     os.makedirs(CACHE_DIR, exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
@@ -93,9 +94,7 @@ def store(path: str, key: str, sf_dir: str, nrows: int, cols,
             {
                 "key": key,
                 "sf_dir": sf_dir,
-                "nrows": nrows,
-                "cols": list(cols),
-                "value_hash": vhash,
+                **verdict,
                 "oracle_secs": round(elapsed, 3),
                 "written": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             },

@@ -35,7 +35,8 @@ Env: SWEEP_SF_DIR, SWEEP_NSHARDS (default 4), SWEEP_OUT,
 SPARK_GRAFT_DRIVER_MEM (per-phase heap, default 16g for the decade
 fixture). The shards, codes and members go to a fresh temporary
 directory (under $TMPDIR) that is removed once the run has measured
-it; OUT stays, for tools/minhash_copy_audit.py to adjudicate.
+it. OUT (default: ``make_copies.pairs_out(SWEEP_SF_DIR)``, inside the
+fixture) stays, for tools/minhash_copy_audit.py to adjudicate.
 """
 
 import json
@@ -51,14 +52,13 @@ TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
 sys.path.insert(0, REPO)
 
+from make_copies import pairs_out  # noqa: E402
+
 SF_DIR = os.environ.get("SWEEP_SF_DIR", f"{REPO}/.bench_sf100")
 NSHARDS = int(os.environ.get("SWEEP_NSHARDS", "4"))
 #: Set by the orchestrator for its phase subprocesses.
 SCRATCH = os.environ.get("SWEEP_SCRATCH", "")
-OUT = os.environ.get(
-    "SWEEP_OUT",
-    f"/tmp/copy_audit_{os.path.basename(SF_DIR.rstrip('/'))}_dedup_minhash_lsh",
-)
+OUT = os.environ.get("SWEEP_OUT", pairs_out(SF_DIR))
 
 
 def _session(name):
